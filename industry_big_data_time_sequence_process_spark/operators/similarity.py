@@ -63,7 +63,12 @@ def _unit_batches(it):
     over the same double-cast operands, computed once per row, and the
     division is the same per-element IEEE op, so units are bit-identical
     (twin-pinned in tests/test_opt_r13.py). Flow-through per batch — no
-    closure bank, so the pass is corpus-size-independent."""
+    closure bank, so the pass is corpus-size-independent.
+
+    A zero-norm row gets a NULL ``ue``: the oracle's ``x / 0`` is NULL in
+    DuckDB, so every dot against it is NULL and its pairs drop. A NaN
+    unit would instead pass every ``score >= τ`` filter, because Spark
+    orders NaN above every double."""
     import numpy as np
     import pyarrow as pa
 
@@ -82,7 +87,8 @@ def _unit_batches(it):
             U = E / np.sqrt(acc)[:, None]
         offsets = pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32))
         ue = pa.ListArray.from_arrays(offsets, pa.array(U.ravel(),
-                                                        type=pa.float64()))
+                                                        type=pa.float64()),
+                                      mask=pa.array(acc == 0))
         yield pa.RecordBatch.from_arrays([batch.column("vec_id"), ue],
                                          names=["vec_id", "ue"])
 
@@ -216,54 +222,76 @@ _DUCK_UNIT = ("list_transform({e}, x -> CAST(x AS DOUBLE) / "
 _EMBCOS_BANK_MAX_ROWS = 100_000
 
 
-def _embcos_batches(ids, U, tau: float):
-    """Arrow-batch all-pairs cosine: each corpus batch is scored against
-    the broadcast unit bank with the same LTR fold association as the
-    JVM ``_dot``, each unordered pair emitted once by its smaller
-    vec_id. Bit-identical (twin-pinned): same unit division, same fold
-    order, raw double scores — the HALF_UP round stays in the JVM."""
+#: Cell cap on one dense score block (rows × bank) of the Arrow pair
+#: scorers: at the 100k-row bank cap a full
+#: 10k-row Arrow batch would allocate ~8 GB per matrix, and one skewed
+#: LSH bucket of m rows an m×m block. Row-chunking keeps every
+#: allocation ≤ ~0.4 GB (cells × 8 bytes); per-pair arithmetic is
+#: untouched (each cell's fold is independent), so twin pins hold.
+_MAX_CELLS = 50_000_000
+
+
+def _pair_kernels():
+    """``(units, pairs)``: the numpy halves shared by the Arrow pair
+    scorers. ``units(E)`` unit-normalises rows with the LTR norm fold of
+    ``_unit_batches``; a zero-norm row becomes NaN, which no ``>= τ``
+    test passes — the oracle's NULL. ``pairs(vid, Ub, ids, U, tau)``
+    scores rows ``Ub`` against bank ``U`` with the LTR fold of the JVM
+    ``_dot`` (in-place, one matrix live) in row chunks of at most
+    ``_MAX_CELLS`` cells, and yields ``(vec1, vec2, score)`` batches for
+    ``vid < ids`` pairs at ``score >= tau``: each unordered pair once,
+    raw double scores — the HALF_UP round stays in the JVM.
+
+    Both are closures built per call, so a kernel that captures them
+    pickles them by value: its Python workers never import this
+    package."""
     import numpy as np
     import pyarrow as pa
+    max_cells = _MAX_CELLS
 
-    # ADVICE r13 (guide §5): bound the dense block×bank score matrix —
-    # at the 100k-row bank cap a full 10k-row Arrow batch would allocate
-    # ~8 GB per matrix with ~3 temporaries live at peak. Row-chunking
-    # the batch keeps every allocation ≤ ~0.4 GB (cells × 8 bytes), and
-    # in-place accumulation holds ONE matrix instead of three; per-pair
-    # arithmetic is untouched (each row's fold is independent, and
-    # ``s += x`` computes the identical IEEE adds), so the twin pin
-    # holds unchanged.
-    _MAX_CELLS = 50_000_000
+    def units(E):
+        acc = np.zeros(E.shape[0])
+        for i in range(E.shape[1]):   # LTR fold, same association as _dot
+            acc = acc + E[:, i] * E[:, i]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            U = E / np.sqrt(acc)[:, None]
+        U[acc == 0] = np.nan
+        return U
+
+    def pairs(vid, Ub, ids, U, tau):
+        block = max(1, max_cells // max(1, U.shape[0]))
+        for off in range(0, len(vid), block):
+            v, ub = vid[off:off + block], Ub[off:off + block]
+            s = np.zeros((len(v), U.shape[0]))
+            for i in range(U.shape[1]):   # LTR fold, same as _dot
+                s += ub[:, i:i + 1] * U[:, i][None, :]
+            ri, cj = np.nonzero((s >= tau) & (v[:, None] < ids[None, :]))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(v[ri], type=pa.int64()),
+                 pa.array(ids[cj], type=pa.int64()),
+                 pa.array(s[ri, cj], type=pa.float64())],
+                names=["vec1", "vec2", "score"])
+
+    return units, pairs
+
+
+def _embcos_batches(ids, U, tau: float):
+    """Arrow-batch all-pairs cosine: each corpus batch is scored against
+    the broadcast unit bank by ``_pair_kernels``. Bit-identical to the
+    join twin (twin-pinned): same unit division, same fold order."""
+    import numpy as np
+    units, pairs = _pair_kernels()
 
     def score(it):
-        bank_rows = max(1, U.shape[0])
-        block = max(1, _MAX_CELLS // bank_rows)
         for batch in it:
-            for off in range(0, batch.num_rows, block):
-                chunk = batch.slice(off, block)
-                n = chunk.num_rows
-                if n == 0:
-                    continue
-                E = (chunk.column("embedding").flatten()
-                     .to_numpy(zero_copy_only=False).astype(np.float64)
-                     .reshape(n, -1))
-                d = E.shape[1]
-                acc = np.zeros(n)
-                for i in range(d):
-                    acc = acc + E[:, i] * E[:, i]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    Ub = E / np.sqrt(acc)[:, None]
-                s = np.zeros((n, U.shape[0]))
-                for i in range(d):    # LTR fold, same association as _dot
-                    s += Ub[:, i:i + 1] * U[:, i][None, :]
-                vid = chunk.column("vec_id").to_numpy()
-                mask = (s >= tau) & (vid[:, None] < ids[None, :])
-                ri, cj = np.nonzero(mask)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(vid[ri], type=pa.int64()),
-                     pa.array(ids[cj], type=pa.int64()),
-                     pa.array(s[ri, cj], type=pa.float64())],
-                    names=["vec1", "vec2", "score"])
+            n = batch.num_rows
+            if n == 0:
+                continue
+            E = (batch.column("embedding").flatten()
+                 .to_numpy(zero_copy_only=False).astype(np.float64)
+                 .reshape(n, -1))
+            yield from pairs(batch.column("vec_id").to_numpy(), units(E),
+                             ids, U, tau)
 
     return score
 
@@ -282,12 +310,8 @@ def _emb_bank(e: DataFrame):
     ids = np.array([int(r["vec_id"]) for r in rows], dtype=np.int64)
     E = np.array([list(map(float, r["embedding"])) for r in rows],
                  dtype=np.float64)
-    acc = np.zeros(len(rows))
-    for i in range(E.shape[1]):
-        acc = acc + E[:, i] * E[:, i]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        U = E / np.sqrt(acc)[:, None]
-    return ids, U
+    units, _ = _pair_kernels()
+    return ids, units(E)
 
 
 @op("dedup_embedding_cosine", oracle=f"""
@@ -544,8 +568,10 @@ def sim_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected candidates ~linear (measured e=0.83 at 10x; SCALE.md).
 
     A pair is a candidate when it collides in ANY band
-    (P = 1 - (1 - (1-θ/π)^bits)^bands), then only candidates are
-    verified. Measured at sf0.01 (tests/test_lsh_bands.py): recall@5 of
+    (P = 1 - (1 - (1-θ/π)^bits)^bands), and only candidates are
+    verified: each (band, bucket) scores its own members in one grouped
+    Arrow pass (``_lsh_pairs``). Measured at sf0.01
+    (tests/test_lsh_bands.py): recall@5 of
     the candidate cut is 0.466 vs 0.131 for one band, at a 4.3x
     candidate reduction vs all-pairs. This corpus is isotropic noise
     (mean true-top-5 cosine ≈ 0.32, θ ≈ 71°) — the hardest case for
@@ -558,35 +584,51 @@ def sim_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_pairs(_lsh_bands(e).select("vec_id", "band", "bucket"), e)
 
 
+def _lsh_verify(tau: float):
+    """Grouped-Arrow kernel of ``_lsh_pairs``: one (band, bucket) group's
+    ``(vec_id, embedding)`` rows in, its ``(vec1 < vec2, score)`` pairs
+    at ``score >= tau`` out — the bucket is its own bank for
+    ``_pair_kernels``, so a skewed bucket is scored in bounded row
+    chunks. A by-value closure, like ``_lsh_bands_batches``."""
+    import numpy as np
+    import pyarrow as pa
+    units, pairs = _pair_kernels()
+    schema = pa.schema([("vec1", pa.int64()), ("vec2", pa.int64()),
+                        ("score", pa.float64())])
+
+    def verify(t):
+        E = (t.column("embedding").combine_chunks().flatten()
+             .to_numpy(zero_copy_only=False).astype(np.float64)
+             .reshape(t.num_rows, -1))
+        vid = t.column("vec_id").to_numpy()
+        U = units(E)
+        return pa.Table.from_batches(list(pairs(vid, U, vid, U, tau)),
+                                     schema=schema)
+
+    return verify
+
+
 def _lsh_pairs(b: DataFrame, e: DataFrame) -> DataFrame:
-    """Candidate join + cosine verify over a PREBUILT (vec_id, band,
+    """Cosine-verified candidate pairs over a PREBUILT (vec_id, band,
     bucket) signature frame — the serve-side core shared by
-    ``sim_lsh_bucketed`` and the bench build/serve split."""
-    a = b.select(F.col("vec_id").alias("vec1"), "band", "bucket")
-    b2 = b.select(F.col("vec_id").alias("vec2"),
-                  F.col("band").alias("band2"),
-                  F.col("bucket").alias("bucket2"))
-    cand = (
-        a.join(b2, (F.col("band") == F.col("band2"))
-               & (F.col("bucket") == F.col("bucket2"))
-               & (F.col("vec1") < F.col("vec2")))
-         .groupBy("vec1", "vec2").agg(F.count("*").alias("n_shared_bands"))
-    )
-    # Verify with norms factored out BEFORE the pair join (the
-    # dedup_embedding_cosine discipline, identical in the oracle): one
-    # 64-wide dot per candidate instead of three — measured 13.3 -> 4.7 s
-    # at sf0.1 where the 457k-pair verify stage dominates. r13: unit
-    # vectors come from the Arrow pass (_unit_batches), bit-identical.
-    u = _unit_vectors(e)
-    e1 = u.select(F.col("vec_id").alias("vec1"), F.col("ue").alias("ua"))
-    e2 = u.select(F.col("vec_id").alias("vec2"), F.col("ue").alias("ub"))
-    score = _dot(F.col("ua"), F.col("ub"))
-    return (
-        cand.join(e1, "vec1").join(e2, "vec2")
-            .filter(score >= 0.2)
-            .select("vec1", "vec2", "n_shared_bands",
-                    F.round(score, 6).alias("cosine"))
-    )
+    ``sim_lsh_bucketed`` and the bench build/serve split.
+
+    The signatures meet their embeddings, then ONE grouped Arrow pass
+    scores every pair inside each (band, bucket) (``_lsh_verify``, the
+    same unit and dot folds as the oracle's ``_DUCK_UNIT``/``_DUCK_DOT``).
+    A pair colliding in k bands is emitted k times with a bit-identical
+    score, so counting the copies gives ``n_shared_bands``. No candidate
+    pair is joined back to its vectors, and no pair is scored by the
+    interpreted ``_dot`` fold (pinned in tests/test_plans.py)."""
+    scored = (b.join(e.select("vec_id", "embedding"), "vec_id")
+               .groupBy("band", "bucket")
+               .applyInArrow(_lsh_verify(0.2),
+                             "vec1 long, vec2 long, score double"))
+    return (scored.groupBy("vec1", "vec2")
+                  .agg(F.count("*").alias("n_shared_bands"),
+                       F.max("score").alias("score"))
+                  .select("vec1", "vec2", "n_shared_bands",
+                          F.round("score", 6).alias("cosine")))
 
 
 @op("sim_lsh_recall_eval", oracle=f"""
@@ -4985,7 +5027,7 @@ def sim_lsh_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates come from the shared `_lsh_bands` signatures (OR over 4
     n-adaptive-width hyperplane bands — collision in ANY band), then
     one exact cosine verify per candidate with norms factored out
-    before the pair join (the `_lsh_pairs` discipline). The oracle
+    before the pair join (`_unit_vectors`). The oracle
     replays the identical plane bank from the portable md5 parity.
 
     Scale shape: the query side prunes to ~n/97 signatures BEFORE the

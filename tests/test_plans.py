@@ -586,6 +586,45 @@ def test_radius_search_candidate_join_is_hash_keyed(spark):
     assert "CartesianProduct" not in plan
 
 
+def _executed_nodes(spark, key: str) -> list:
+    """Every node of the key's plan as executed by one collect(), with
+    adaptive plans and query stages unwrapped to what actually ran."""
+    df = REGISTRY[key].fn(spark, SF_T2)
+    df.collect()
+    nodes, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        nodes.append(node)
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+def test_lsh_bucketed_verifies_inside_buckets(spark):
+    """sim_lsh_bucketed scores each (band, bucket) in ONE grouped Arrow
+    pass: the signer is the only other Python node (no second signer
+    for a join side, no unit-vector pass), and no interpreted
+    ``aggregate(zip_with …)`` cosine fold is left in the plan."""
+    nodes = _executed_nodes(spark, "sim_lsh_bucketed")
+    names = [n.getClass().getSimpleName() for n in nodes]
+    text = "\n".join(n.simpleString(1000) for n in nodes)
+    assert "aggregate(zip_with" not in text
+    assert names.count("MapInArrowExec") == 1, names
+    grouped = [n for n in nodes
+               if n.getClass().getSimpleName() == "FlatMapGroupsInArrowExec"]
+    assert len(grouped) == 1, names
+    keys = grouped[0].groupingAttributes()
+    assert [keys.apply(i).name() for i in range(keys.size())] == [
+        "band", "bucket"]
+
+
 def test_pipeline_ts_audit_no_windows_no_python(spark):
     """pipeline_timeseries_audit is ONE fully declarative plan: no
     window operators (the dedup is a max_by aggregate), no Python
