@@ -102,8 +102,11 @@ def _unit_vectors(e: DataFrame) -> DataFrame:
 
 
 def _unit_vectors_jvm(e: DataFrame) -> DataFrame:
-    norm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-    unit = F.transform("embedding", lambda x: x.cast("double") / norm)
+    sq = _dot(F.col("embedding"), F.col("embedding"))
+    # Zero norm -> NULL ue, as in _unit_batches (an unguarded x / 0 raises
+    # DIVIDE_BY_ZERO under ANSI mode).
+    unit = F.when(sq != 0, F.transform(
+        "embedding", lambda x: x.cast("double") / F.sqrt(sq)))
     return e.select("vec_id", unit.alias("ue"))
 
 

@@ -21,6 +21,10 @@ branches instead of assuming a physical type:
 A tripwire in :func:`load` asserts decoded timestamps land in a sane range
 (year >= 2000) so a future silent corpus re-type fails loudly instead of
 poisoning every downstream ts operator (round-2 post-mortem).
+
+``events.parquet`` may be a single file or a directory of ``*.parquet``
+parts: the footer probe reads the first sorted part, the tripwire every
+part's row-group statistics.
 """
 from __future__ import annotations
 
@@ -121,26 +125,43 @@ def path(sf_dir: str, table: str) -> str:
     return f"{sf_dir}/{table}.parquet"
 
 
-def _events_file_stamp(sf_dir: str) -> tuple[str, float, int]:
-    """(path, mtime, size) identity of the events parquet — regenerating the
-    corpus in place changes the stamp, which invalidates both the footer-type
-    cache and the sanity-probe memo (a path-only key would silently reuse a
-    stale decode branch across an in-process corpus rewrite)."""
+def _events_parts(sf_dir: str) -> list[str]:
+    """The events parquet file, or the sorted ``*.parquet`` parts when
+    ``events.parquet`` is a directory dataset."""
+    import glob
     import os
 
     p = path(sf_dir, "events")
-    try:
-        st = os.stat(p)
-        return (p, st.st_mtime, st.st_size)
-    except OSError:
-        return (p, 0.0, 0)
+    if os.path.isdir(p):
+        return sorted(glob.glob(os.path.join(p, "*.parquet")))
+    return [p]
+
+
+def _events_file_stamp(sf_dir: str) -> tuple[tuple[str, float, int], ...]:
+    """(path, mtime, size) identity of each events parquet file —
+    regenerating the corpus in place changes the stamp, which invalidates
+    both the footer-type cache and the sanity-probe memo (a path-only key
+    would silently reuse a stale decode branch across an in-process corpus
+    rewrite; a directory's own mtime misses a part rewritten in place)."""
+    import os
+
+    stamp = []
+    for p in _events_parts(sf_dir):
+        try:
+            st = os.stat(p)
+            stamp.append((p, st.st_mtime, st.st_size))
+        except OSError:
+            stamp.append((p, 0.0, 0))
+    return tuple(stamp)
 
 
 @lru_cache(maxsize=64)
-def _events_ts_kind_stamped(stamp: tuple[str, float, int]) -> str:
+def _events_ts_kind_stamped(stamp: tuple[tuple[str, float, int], ...]) -> str:
     import pyarrow.parquet as pq
 
-    t = pq.read_schema(stamp[0]).field("ts").type
+    if not stamp:
+        raise FileNotFoundError("events.parquet has no *.parquet parts")
+    t = pq.read_schema(stamp[0][0]).field("ts").type
     s = str(t)
     if s.startswith("timestamp") and "[ns" not in s:
         return "timestamp"
@@ -149,7 +170,8 @@ def _events_ts_kind_stamped(stamp: tuple[str, float, int]) -> str:
 
 def events_ts_kind(sf_dir: str) -> str:
     """Probe the on-disk physical type of ``events.ts`` from the parquet
-    footer (driver-side, one footer read, cached per (path, mtime, size)).
+    footer (one footer read in this process — the first part of a
+    directory dataset — cached per (path, mtime, size) of every file).
 
     Returns ``"timestamp"`` (any µs/ms/s timestamp unit Spark decodes
     natively) or ``"int64_ns"`` (raw int64 / timestamp[ns], which Spark 4
@@ -182,17 +204,17 @@ def decode_events_ts(df: DataFrame, sf_dir: str) -> DataFrame:
 #: Sanity floor for decoded event timestamps — the corpus is generated in
 #: 2024+; anything earlier means the decode branch picked wrong.
 _TS_SANITY_FLOOR_YEAR = 2000
-_ts_checked: set[tuple[str, float, int]] = set()
+_ts_checked: set[tuple[tuple[str, float, int], ...]] = set()
 
 
 def _assert_ts_sane(sf_dir: str) -> None:
-    """Pure-footer tripwire, once per (path, mtime, size): the row-group
-    statistics minimum of ``ts``, pushed through the same decode rule the
-    Spark branch applies, must land in a plausible year. Turns a silent
-    corpus re-type into a loud failure WITHOUT putting any eager Spark
-    action on the load path (the former ``limit(1).collect()`` probe did) —
-    this runs driver-side against metadata pyarrow already fetched for the
-    type probe's footer read."""
+    """Pure-footer tripwire, once per stamp: the smallest row-group
+    statistics minimum of ``ts`` over every events file, pushed through the
+    same decode rule the Spark branch applies, must land in a plausible
+    year. Turns a silent corpus re-type into a loud failure WITHOUT
+    putting any eager Spark action on the load path (the former
+    ``limit(1).collect()`` probe did) — this reads parquet footers
+    only. Row groups without statistics are skipped."""
     stamp = _events_file_stamp(sf_dir)
     if stamp in _ts_checked:
         return
@@ -200,25 +222,27 @@ def _assert_ts_sane(sf_dir: str) -> None:
 
     import pyarrow.parquet as pq
 
-    try:
-        md = pq.ParquetFile(stamp[0]).metadata
+    lows = []
+    for p, _, _ in stamp:
+        md = pq.ParquetFile(p).metadata
         col_idx = md.schema.to_arrow_schema().get_field_index("ts")
-        stats = md.row_group(0).column(col_idx).statistics
-        lo = stats.min if stats is not None and stats.has_min_max else None
-    except Exception:
-        return  # stats absent/unreadable: nothing to check, not an error
-    if lo is None:
-        return
-    if isinstance(lo, (int, float)):  # int64 / timestamp[ns] physical
-        year = datetime.datetime.fromtimestamp(
-            int(lo) / 1e9, tz=datetime.timezone.utc).year
-    else:  # decoded datetime from a true timestamp physical type
-        year = lo.year
-    if year < _TS_SANITY_FLOOR_YEAR:
-        raise AssertionError(
-            f"events.ts decodes to year {year} (< {_TS_SANITY_FLOOR_YEAR}) "
-            f"for {sf_dir} — the physical parquet type changed and the "
-            f"decode branch is wrong; see events_ts_kind() in sources/io.py")
+        for rg in range(md.num_row_groups):
+            stats = md.row_group(rg).column(col_idx).statistics
+            if stats is not None and stats.has_min_max:
+                lows.append(stats.min)
+    if lows:
+        lo = min(lows)
+        if isinstance(lo, (int, float)):  # int64 / timestamp[ns] physical
+            year = datetime.datetime.fromtimestamp(
+                int(lo) / 1e9, tz=datetime.timezone.utc).year
+        else:  # decoded datetime from a true timestamp physical type
+            year = lo.year
+        if year < _TS_SANITY_FLOOR_YEAR:
+            raise AssertionError(
+                f"events.ts decodes to year {year} (< "
+                f"{_TS_SANITY_FLOOR_YEAR}) for {sf_dir} — the physical "
+                f"parquet type changed and the decode branch is wrong; see "
+                f"events_ts_kind() in sources/io.py")
     _ts_checked.add(stamp)
 
 

@@ -140,14 +140,20 @@ def test_ivf_assign_arrow_equals_jvm(spark):
 def test_unit_vectors_arrow_equals_jvm(spark):
     """The Arrow numpy unit normalizer vs the inline-HOF twin: every
     component of every unit vector exactly equal (same LTR norm fold,
-    same per-element IEEE division)."""
+    same per-element IEEE division); a zero-norm row has a NULL unit in
+    both."""
     from industry_big_data_time_sequence_process_spark.operators.similarity import (
         _unit_vectors, _unit_vectors_jvm,
     )
-    e = load(spark, SF_T2, "embeddings")
+    e = load(spark, SF_T2, "embeddings").select("vec_id", "embedding")
+    zero = e.limit(1).select(
+        F.lit(-1).cast(e.schema["vec_id"].dataType).alias("vec_id"),
+        F.transform("embedding", lambda x: x - x).alias("embedding"))
+    e = e.unionByName(zero)
     ra = _rows(_unit_vectors(e), ["vec_id", "ue"])
     rb = _rows(_unit_vectors_jvm(e), ["vec_id", "ue"])
-    assert len(ra) > 0 and ra == rb
+    assert len(ra) > 1 and ra == rb
+    assert ra[0] == (-1, None)
 
 
 @pytest.mark.smoke
