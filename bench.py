@@ -157,10 +157,10 @@ def _bench_family_splits(spark, sf_dir: str) -> dict[str, dict[str, float]]:
         F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("qemb"))
 
     def build_pq():
-        cb = S._pq_codebook(e).cache()
+        cb = S._pq_codebook(e)
         codes = S._pq_codes(e, cb).cache()
         codes.count()
-        return cb, codes
+        return cb.frame.cache(), codes
 
     split("pq_topk", build_pq,
           lambda cb, codes: S._pq_serve_topk(qdf, codes, cb, e))
@@ -234,14 +234,14 @@ def _bench_ivfpq_split(spark, sf_dir: str) -> dict[str, dict[str, float]]:
     e = load(spark, sf_dir, "embeddings")
     # median-of-N builds (round 10, same protocol as the family splits)
     bts = []
-    corpus = None
+    index = None
     for _ in range(N_TIMED):
-        if corpus is not None:
-            corpus.unpersist()
+        if index is not None:
+            index.corpus.unpersist()
         t0 = time.perf_counter()
-        corpus, cent, cb = _ivfpq_index(e)
-        corpus = corpus.cache()
-        corpus.count()  # materialize the coded inverted lists
+        index = _ivfpq_index(e)
+        index = index._replace(corpus=index.corpus.cache())
+        index.corpus.count()  # materialize the coded inverted lists
         bts.append(time.perf_counter() - t0)
     b_min, b_med = round(min(bts), 3), round(statistics.median(bts), 3)
     qdf = e.filter(F.col("vec_id") < _N_QUERIES)
@@ -253,11 +253,11 @@ def _bench_ivfpq_split(spark, sf_dir: str) -> dict[str, dict[str, float]]:
 
     def serve() -> None:
         # serving default: nprobe auto-scales with nlist (r8)
-        _ivfpq_serve_topk(qdf, corpus, cent, cb, e, nprobe=np_auto).collect()
+        _ivfpq_serve_topk(qdf, index, e, nprobe=np_auto).collect()
 
     serve()  # warm-up
     s_min, s_med = _timed_passes(serve)
-    corpus.unpersist()
+    index.corpus.unpersist()
     return {"min": {"ivfpq_build": b_min, "ivfpq_serve": s_min},
             "median": {"ivfpq_build": b_med, "ivfpq_serve": s_med}}
 

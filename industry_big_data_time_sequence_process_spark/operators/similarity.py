@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
@@ -991,37 +992,55 @@ def _lloyd_np(E, cents):
     return cents
 
 
-def _seeded_lloyd_driver(spark: SparkSession, rows, nlist: int) -> DataFrame:
-    """Seed (cid = hv % nlist, per-cid (hv, vec_id)-min member) and train
-    on collected ``(vec_id, embedding, hv)`` rows; return the trained
-    centroids as a cached local DataFrame — the leaf the callers
-    broadcast, exactly like the distributed ``_lloyd`` result."""
+#: Schema of a trained centroid frame (driver twin, ``_lloyd`` and the
+#: persisted ``centroids`` artifact alike).
+_CENT_SCHEMA = "cid long, cemb array<double>"
+
+
+class Centroids(NamedTuple):
+    """Trained IVF centroids: the (cid, cemb) frame the JVM paths
+    broadcast, and its numpy ``bank`` (cid vector ascending, k×64
+    float64 matrix) the Arrow assigner and the serve fast path close
+    over — or None when the frame exceeds ``_ASSIGN_BANK_MAX_ROWS``.
+    Built once where the centroids are made, so no consumer collects
+    them again; an empty corpus gives an empty frame and a 0-row bank."""
+    frame: DataFrame
+    bank: tuple | None
+
+
+def _bank_of(rows) -> tuple:
+    """The numpy bank of (cid, cemb) rows (Rows or tuples, any order)."""
     import numpy as np
-    if not rows:   # degenerate empty corpus: no seeds, no centroids —
-        return spark.createDataFrame(   # same empty frame as _lloyd's
-            [], "cid long, cemb array<double>")
-    ordered = sorted(rows, key=lambda r: (r["hv"], r["vec_id"]))
-    E = np.array([r["embedding"] for r in ordered], dtype=np.float64)
-    cents: dict = {}
-    for pos, r in enumerate(ordered):
-        cid = int(r["hv"]) % nlist
-        if cid not in cents:    # first in (hv, vec_id) order seeds the cell
-            cents[cid] = E[pos]
-    trained = _lloyd_np(E, cents)
-    out = [(int(cid), [float(x) for x in v])
-           for cid, v in sorted(trained.items())]
+    rows = sorted(rows, key=lambda r: int(r[0]))
+    cids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+    C = (np.array([list(map(float, r[1])) for r in rows], dtype=np.float64)
+         if rows else np.zeros((0, _EMB_DIM)))
+    return cids, C
+
+
+def _seeded_lloyd_driver(spark: SparkSession, rows, nlist: int) -> Centroids:
+    """Seed (cid = hv % nlist, per-cid (hv, vec_id)-min member) and train
+    on collected ``(vec_id, embedding, hv)`` rows. The trained centroids
+    are already in driver memory, so their bank comes with the frame —
+    a LocalTableScan leaf the callers broadcast, exactly like the
+    distributed ``_lloyd`` result."""
+    import numpy as np
+    out = []
+    if rows:   # degenerate empty corpus: no seeds, no centroids
+        ordered = sorted(rows, key=lambda r: (r["hv"], r["vec_id"]))
+        E = np.array([r["embedding"] for r in ordered], dtype=np.float64)
+        cents: dict = {}
+        for pos, r in enumerate(ordered):
+            cid = int(r["hv"]) % nlist
+            if cid not in cents:    # first in (hv, vec_id) order seeds it
+                cents[cid] = E[pos]
+        trained = _lloyd_np(E, cents)
+        out = [(int(cid), [float(x) for x in v])
+               for cid, v in sorted(trained.items())]
     # No .cache(): the frame is a LocalTableScan leaf — there is no
     # lineage to re-run, and caching it would only add a materialization
     # job before the first broadcast.
-    df = spark.createDataFrame(out, "cid long, cemb array<double>")
-    # r14: the trained bank already lives in driver memory — attach it
-    # so `_cent_bank` consumers (Arrow assignment, the serve fast path)
-    # skip the count+collect round-trip per pass. Per-build state on the
-    # in-memory frame object, never persisted across runs.
-    cids = np.array([c for c, _ in out], dtype=np.int64)
-    C = np.array([v for _, v in out], dtype=np.float64)
-    df._graft_cent_bank = (cids, C) if out else None
-    return df
+    return Centroids(spark.createDataFrame(out, _CENT_SCHEMA), _bank_of(out))
 
 
 def _fx_mean_agg(df: DataFrame, keys: list) -> DataFrame:
@@ -1042,40 +1061,22 @@ def _fx_mean_agg(df: DataFrame, keys: list) -> DataFrame:
 
 
 #: Ceiling on collected centroid-bank rows for the Arrow assignment
-#: pass. The coarse-centroid frames every caller passes are bounded by
-#: the ``_IVF_NLIST_CEIL`` clamp (65536 × 64 doubles ≈ 33 MB — the same
-#: magnitude the JVM path already broadcasts), so the gate only ever
-#: falls back for a hypothetical unclamped centroid frame.
+#: pass. The capped trainer's frames are bounded by the
+#: ``_IVF_NLIST_CEIL`` clamp (65536 × 64 doubles ≈ 33 MB — the same
+#: magnitude the JVM path already broadcasts); ``_ivf_train``'s
+#: unclamped k ≈ n/97 can pass it, and its centroids then assign
+#: through the JVM join.
 _ASSIGN_BANK_MAX_ROWS = 200_000
 
 
 def _cent_bank(centroids: DataFrame):
-    """Collect a bounded (cid, cemb) frame into the numpy bank the Arrow
-    assigner closes over: (cid vector ascending, k×64 float64 matrix),
-    or None when the frame exceeds ``_ASSIGN_BANK_MAX_ROWS`` (caller
-    falls back to the JVM join) or is empty. Cheap by construction: the
-    trained centroid frames are LocalTableScan leaves (driver-trained)
-    or tiny cached results.
-
-    r14: frames built by the driver trainer carry their bank attached
-    (``_graft_cent_bank``) — the count+collect round-trip (two driver
-    queries per index build / serve pass) only runs for frames that
-    arrived from storage or a distributed train. Per-build in-memory
-    state, never persisted across runs."""
-    import numpy as np
-    attached = getattr(centroids, "_graft_cent_bank", False)
-    if attached is not False:
-        return attached
+    """Collect a distributed-trained (cid, cemb) frame into its numpy
+    bank (see ``Centroids``), or None when it exceeds
+    ``_ASSIGN_BANK_MAX_ROWS``. One count + one collect; runs once where
+    a ``Centroids`` value is made from a ``_lloyd`` frame."""
     if centroids.count() > _ASSIGN_BANK_MAX_ROWS:
         return None
-    rows = sorted(centroids.select("cid", "cemb").collect(),
-                  key=lambda r: r["cid"])
-    if not rows:
-        return None
-    cids = np.array([int(r["cid"]) for r in rows], dtype=np.int64)
-    C = np.array([list(map(float, r["cemb"])) for r in rows],
-                 dtype=np.float64)
-    return cids, C
+    return _bank_of(centroids.select("cid", "cemb").collect())
 
 
 def _topn_scan_np(cos, rounds: int):
@@ -1156,24 +1157,23 @@ def _ivf_assign_batches(cids, C, nprobe: int):
     return assign
 
 
-def _ivf_assign(e: DataFrame, centroids: DataFrame,
-                nprobe: int = 1, arrow: bool = True) -> DataFrame:
+def _ivf_assign(e: DataFrame, cent: Centroids,
+                nprobe: int = 1) -> DataFrame:
     """(vec_id, embedding, cid) — each vector paired with its ``nprobe``
     nearest trained centroids; dispatches to the Arrow numpy twin
-    (``_ivf_assign_batches``) whenever the centroid frame fits the
-    bank gate (always, for the clamped coarse frames), else the JVM
-    join twin below.
+    (``_ivf_assign_batches``) over ``cent.bank`` whenever the centroids
+    have one (always, for the clamped coarse frames), else the JVM join
+    twin below.
 
-    ``arrow=False`` routes through the JVM twin regardless: callers
-    assigning SMALL frames (query probes, arrival micro-batches) pass
-    it — the Arrow pass's fixed JVM↔Python stage cost (~1 s/pass,
-    measured on the incremental serve) outweighs the vectorization win
-    below corpus scale, while the broadcast join evaluates a handful
-    of interpreted folds. Identical output either way (twin-pinned)."""
-    bank = _cent_bank(centroids) if arrow else None
-    if bank is None:
-        return _ivf_assign_jvm(e, centroids, nprobe)
-    cids, C = bank
+    Callers assigning SMALL frames (query probes, arrival micro-batches)
+    call ``_ivf_assign_jvm`` directly — the Arrow pass's fixed
+    JVM↔Python stage cost (~1 s/pass, measured on the incremental
+    serve) outweighs the vectorization win below corpus scale, while
+    the broadcast join evaluates a handful of interpreted folds.
+    Identical output either way (twin-pinned)."""
+    if cent.bank is None:
+        return _ivf_assign_jvm(e, cent.frame, nprobe)
+    cids, C = cent.bank
     emb_t = e.schema["embedding"].dataType.simpleString()
     return (e.select("vec_id", "embedding")
              .mapInArrow(_ivf_assign_batches(cids, C, nprobe),
@@ -1247,8 +1247,8 @@ def _ivf_assign_jvm(e: DataFrame, centroids: DataFrame,
              .select("vec_id", "embedding", "cid"))
 
 
-def _ivf_train(e: DataFrame) -> DataFrame:
-    """(cid, cemb): the trained IVF centroids — Spark twin of
+def _ivf_train(e: DataFrame) -> Centroids:
+    """The trained IVF centroids — Spark twin of
     ``_duck_ivf_prefix``'s u-chain, bit-identical by construction.
 
     Training is k-means with cosine assignment (spherical Lloyd) and a
@@ -1265,8 +1265,8 @@ def _ivf_train(e: DataFrame) -> DataFrame:
     r13: while n·k fits ``_DRIVER_TRAIN_MAX_PAIRS`` the loop runs as the
     bit-identical numpy twin on the driver (one collect of the training
     rows, zero distributed jobs); past the budget the distributed
-    ``_lloyd`` below takes over unchanged. The returned frame stays
-    cached (tiny: k x 64 doubles) — callers broadcast it.
+    ``_lloyd`` below takes over unchanged. A distributed result's frame
+    stays cached (tiny: k x 64 doubles) — callers broadcast it.
     """
     import math
     n = e.count()
@@ -1290,12 +1290,13 @@ def _ivf_train(e: DataFrame) -> DataFrame:
     return _lloyd(e, cent)
 
 
-def _lloyd(train: DataFrame, cent: DataFrame) -> DataFrame:
+def _lloyd(train: DataFrame, cent: DataFrame) -> Centroids:
     """``_IVF_ITERS`` fixed Lloyd iterations of (assign ``train`` to
     ``cent``, recompute exact fixed-point means); ``cent`` must arrive
-    cached and the result stays cached (callers broadcast it)."""
+    cached and the result's frame stays cached (callers broadcast it).
+    The trained frame's bank is collected once, here."""
     for _ in range(_IVF_ITERS):
-        assigned = _ivf_assign(train, cent)
+        assigned = _ivf_assign(train, Centroids(cent, _cent_bank(cent)))
         # r13: fused fixed-point mean (64 combinable SUMs, one Exchange)
         # instead of posexplode -> (cid, dim) aggregate -> collect_list
         # re-assembly (two Exchanges, 64x the shuffled rows). Identical
@@ -1313,7 +1314,7 @@ def _lloyd(train: DataFrame, cent: DataFrame) -> DataFrame:
         cent = new_cent
     # `cent` (the trained centroids) intentionally stays cached: callers'
     # assignment plans broadcast it, possibly more than once.
-    return cent
+    return Centroids(cent, _cent_bank(cent))
 
 
 def _ivf_cells(e: DataFrame) -> DataFrame:
@@ -1322,9 +1323,9 @@ def _ivf_cells(e: DataFrame) -> DataFrame:
     return _ivf_assign(e, _ivf_train(e))
 
 
-def _ivf_train_capped(e: DataFrame, n=None, sample_rows=None) -> DataFrame:
-    """(cid, cemb): centroids trained on the md5-lowest ``~50·nlist``
-    vectors with ``nlist = _ivf_nlist(n)`` cells (VERDICT r6 #1: nlist
+def _ivf_train_capped(e: DataFrame, n=None, sample_rows=None) -> Centroids:
+    """Centroids trained on the md5-lowest ``~50·nlist`` vectors
+    with ``nlist = _ivf_nlist(n)`` cells (VERDICT r6 #1: nlist
     grows ~√n so the per-query scanned fraction FALLS with the corpus;
     the training sample grows with nlist, so training stays ~50·nlist²
     distances — sub-linear in n up to the 65536-cell ceiling). Spark
@@ -1543,8 +1544,8 @@ def sim_ivf_topk_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     cent = _ivf_train_capped(e)
     cells = _ivf_assign(e, cent)
-    qprobe = _ivf_assign(e.filter(F.col("vec_id") < _N_QUERIES), cent,
-                         nprobe=2, arrow=False) \
+    qprobe = _ivf_assign_jvm(e.filter(F.col("vec_id") < _N_QUERIES),
+                             cent.frame, nprobe=2) \
         .select(F.col("vec_id").alias("q_vec_id"),
                 F.col("embedding").alias("qemb"), "cid",
                 F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
@@ -1647,8 +1648,8 @@ def sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("cid").alias("q_cid"))
     cc = cells.select(F.col("vec_id").alias("c_vec_id"),
                       F.col("cid").alias("c_cid"))
-    qp = (_ivf_assign(e.filter(F.col("vec_id") < _EVAL_QUERIES), cent,
-                      nprobe=2, arrow=False)
+    qp = (_ivf_assign_jvm(e.filter(F.col("vec_id") < _EVAL_QUERIES),
+                          cent.frame, nprobe=2)
           .select(F.col("vec_id").alias("qq"),
                   F.col("cid").alias("p_cid")))
     hit1 = F.count_if(F.col("q_cid") == F.col("c_cid"))
@@ -2063,8 +2064,21 @@ def _exact_d2fx(a: Column, b: Column) -> Column:
     return F.floor(d2 * F.lit(_PQ_FX)).cast("long")
 
 
-def _pq_codebook(e: DataFrame, sample_rows=None) -> DataFrame:
-    """(m, k, cw): per-subspace TRAINED codebooks — the driver-side
+#: Schema of a trained codebook frame (and of the persisted artifact).
+_CB_SCHEMA = "m int, k int, cw array<double>"
+
+
+class Codebook(NamedTuple):
+    """Trained PQ codebooks: the (m, k, cw) frame the JVM twins
+    broadcast, and its per-subspace numpy ``banks`` (m -> (k vector
+    ascending, K×4 codeword matrix)) the Arrow coders and the serve
+    fast path close over. Empty for an empty corpus."""
+    frame: DataFrame
+    banks: dict
+
+
+def _pq_codebook(e: DataFrame, sample_rows=None) -> Codebook:
+    """Per-subspace TRAINED codebooks — the driver-side
     numpy twin of ``_pq_codebook_dist`` (r13 optimization). The training
     sample is a CONSTANT ``_PQ_TRAIN_CAP`` = 2000 rows at any corpus
     size, so the per-subspace Lloyd loop is bounded driver work by
@@ -2076,7 +2090,8 @@ def _pq_codebook(e: DataFrame, sample_rows=None) -> DataFrame:
     ``_PQ_K`` sample vectors), same exact-integer argmin key
     ``dfx·K + k``, same fixed-point mean ``(sum(floor(x·FX))/count)/FX``
     with the same IEEE association, dead codewords drop identically.
-    The returned frame is a cached local leaf — callers broadcast it."""
+    Returns the codebook frame (a local leaf callers broadcast) with the
+    banks built from the same in-memory rows."""
     import numpy as np
     # ``sample_rows``: a caller that already collected the md5-ordered
     # sample (>= _PQ_TRAIN_CAP rows, (hv, vec_id)-ascending) hands its
@@ -2087,10 +2102,7 @@ def _pq_codebook(e: DataFrame, sample_rows=None) -> DataFrame:
             else (e.select("vec_id", "embedding", _hv_col().alias("hv"))
                    .orderBy("hv", "vec_id").limit(_PQ_TRAIN_CAP).collect()))
     if not rows:   # degenerate empty corpus: no seeds, empty codebook
-        empty = e.sparkSession.createDataFrame(
-            [], "m int, k int, cw array<double>")
-        empty._graft_cb_rows = []
-        return empty
+        return Codebook(e.sparkSession.createDataFrame([], _CB_SCHEMA), {})
     ordered = sorted(rows, key=lambda r: (r["hv"], r["vec_id"]))
     E = np.array([r["embedding"] for r in ordered], dtype=np.float64)
     n = E.shape[0]
@@ -2122,13 +2134,8 @@ def _pq_codebook(e: DataFrame, sample_rows=None) -> DataFrame:
     out = [(int(m), int(k), [float(x) for x in v])
            for (m, k), v in sorted(cb.items())]
     # LocalTableScan leaf — no cache needed (see _seeded_lloyd_driver).
-    df = e.sparkSession.createDataFrame(
-        out, "m int, k int, cw array<double>")
-    # r14: the trained codebook already lives in driver memory — attach
-    # it so the serve fast path skips the collect per pass (same
-    # per-build in-memory discipline as ``_graft_cent_bank``).
-    df._graft_cb_rows = out
-    return df
+    return Codebook(e.sparkSession.createDataFrame(out, _CB_SCHEMA),
+                    _pq_code_banks(out))
 
 
 def _pq_codebook_dist(e: DataFrame) -> DataFrame:
@@ -2198,17 +2205,12 @@ def _pq_codebook_dist(e: DataFrame) -> DataFrame:
     return cb
 
 
-def _pq_code_banks(cb: DataFrame) -> dict:
-    """Collect the (constant-size, ≤ M·K-row) codebook into per-subspace
-    numpy banks: m -> (k vector ascending, K×4 codeword matrix). Frames
-    built by the driver trainer carry their rows attached
-    (``_graft_cb_rows``, r14) — then no collect job runs at all."""
+def _pq_code_banks(rows) -> dict:
+    """Per-subspace numpy banks (see ``Codebook``) of (m, k, cw) codebook
+    rows — the trainer's tuples or collected Rows, any order."""
     import numpy as np
-    rows = getattr(cb, "_graft_cb_rows", None)
-    if rows is None:
-        rows = cb.collect()
     by_m: dict = {}
-    for r in rows:      # positional: accepts Rows and attached tuples
+    for r in rows:      # positional: accepts Rows and tuples
         by_m.setdefault(int(r[0]), []).append((int(r[1]), r[2]))
     return {m: (np.array([k for k, _ in sorted(kvs)], dtype=np.int64),
                 np.array([list(map(float, w)) for _, w in sorted(kvs)],
@@ -2346,15 +2348,14 @@ def _assign_code_batches(cids, C, nassign: int, banks: dict):
     return run
 
 
-def _pq_codes(e: DataFrame, cb: DataFrame) -> DataFrame:
+def _pq_codes(e: DataFrame, cb: Codebook) -> DataFrame:
     """(vec_id, m, code): per-vector, per-subspace nearest codeword.
     The argmin is an exact-integer min over ``dfx * K + k`` (distance on
     the 1e-9 grid, codeword id as tiebreak). ONE Arrow-batched pass over
     the corpus (r13 — see ``_pq_code_batches``; the JVM twin below is
     kept for the equality pin)."""
-    banks = _pq_code_banks(cb)
     return (e.select("vec_id", "embedding")
-             .mapInArrow(_pq_code_batches(banks, with_cid=False),
+             .mapInArrow(_pq_code_batches(cb.banks, with_cid=False),
                          "vec_id long, m int, code long"))
 
 
@@ -2400,11 +2401,11 @@ def _pq_scored_frames(codes: DataFrame, dtab: DataFrame) -> DataFrame:
                  .agg(F.sum("dfx").alias("adfx")))
 
 
-def _pq_scored(e: DataFrame, nq: int, cb: DataFrame) -> DataFrame:
+def _pq_scored(e: DataFrame, nq: int, cb: Codebook) -> DataFrame:
     """(q_vec_id, c_vec_id, adfx): asymmetric-distance (ADC) scores —
     each query's M x K subspace distance table joins the corpus codes on
     (m, code); the per-pair total is a SUM of exact longs."""
-    return _pq_scored_frames(_pq_codes(e, cb), _pq_dtab(e, cb, nq))
+    return _pq_scored_frames(_pq_codes(e, cb), _pq_dtab(e, cb.frame, nq))
 
 
 def _pq_serve_topk(qdf: DataFrame, codes: DataFrame, cb: DataFrame,
@@ -2480,7 +2481,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _pq_codebook(e)
     qdf = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("qemb"))
-    return _pq_serve_topk(qdf, _pq_codes(e, cb), cb, e)
+    return _pq_serve_topk(qdf, _pq_codes(e, cb), cb.frame, e)
 
 
 def _duck_pq_truth(nq: int) -> str:
@@ -2696,28 +2697,22 @@ def _probe_rows_np(qrows, bank, nprobe: int):
     return out
 
 
-def _dtab_rows_np(qrows, cbrows):
+def _dtab_rows_np(qrows, banks: dict):
     """[(q_vec_id, m, k, dfx)]: driver numpy twin of ``_pq_dtab_frame``
-    — per (query, subspace, surviving codeword) the fixed-point squared
-    L2 ``floor(Σ_di (x−cw)² · FX)`` with the identical left-to-right
-    di fold ``_pq_d2fx`` evaluates (the same accumulation
-    ``_pq_codebook``'s trainer already uses), so every dfx long is
-    bit-identical to the JVM frame."""
+    over the codebook ``banks`` — per (query, subspace, surviving
+    codeword) the fixed-point squared L2 ``floor(Σ_di (x−cw)² · FX)``
+    with the identical left-to-right di fold ``_pq_d2fx`` evaluates (the
+    same accumulation ``_pq_codebook``'s trainer already uses), so every
+    dfx long is bit-identical to the JVM frame."""
     import numpy as np
-    if not qrows or not cbrows:
+    if not qrows or not banks:
         return []
     E = np.array([[float(x) for x in r["embedding"]] for r in qrows],
                  dtype=np.float64)
     vids = [int(r["vec_id"]) for r in qrows]
-    by_m: dict = {}
-    for r in cbrows:    # positional: accepts Rows and attached tuples
-        by_m.setdefault(int(r[0]), []).append(
-            (int(r[1]), [float(x) for x in r[2]]))
     out = []
-    for m in sorted(by_m):
-        pairs = sorted(by_m[m])
-        karr = [kk for kk, _ in pairs]
-        CW = np.array([cw for _, cw in pairs], dtype=np.float64)
+    for m in sorted(banks):
+        karr, CW = banks[m]
         sub = E[:, m * _PQ_DS:(m + 1) * _PQ_DS]
         acc = np.zeros((len(vids), len(karr)))
         for di in range(_PQ_DS):   # left-to-right fold, same as _pq_d2fx
@@ -2726,34 +2721,45 @@ def _dtab_rows_np(qrows, cbrows):
         dfx = np.floor(acc * _PQ_FX).astype(np.int64)
         for i, vid in enumerate(vids):
             for j, kk in enumerate(karr):
-                out.append((vid, m, kk, int(dfx[i, j])))
+                out.append((vid, m, int(kk), int(dfx[i, j])))
     return out
 
 
-def _serve_local_frames(qdf: DataFrame, cent: DataFrame, cb: DataFrame,
-                        nprobe: int):
-    """(qlocal, qprobe, dtab) LOCAL frames for a small query batch, or
-    None when a gate trips (big query frame / unbanked centroids) and
-    the JVM twins must run. One ``limit(cap+1).collect()`` job replaces
-    the probe and dtab Spark subplans: their inputs (queries, trained
-    centroids, trained codebook) are all driver-bounded by construction,
-    their outputs are metadata-sized, and as LocalTableScan leaves they
-    broadcast without a job and add nothing to plan compilation — the
-    r13 serve regression was exactly this fixed overhead (~6 jobs and
-    ~0.7 s of optimizer time per pass around ~5k result rows).
-    ``qemb`` is materialized as array<double> — the exact float→double
-    widenings the JVM cast produces — so the re-rank's ``_exact_d2fx``
-    sees identical operands."""
-    bank = _cent_bank(cent)
+#: Schema of the coded inverted lists (and of the persisted corpus).
+_CODES_SCHEMA = "vec_id long, cid long, m int, code long"
+
+
+class IvfPqIndex(NamedTuple):
+    """The composed IVF+PQ index: the multi-assigned coded corpus
+    (vec_id, cid, m, code) plus the centroids and codebook it was coded
+    against, each carrying its driver bank. ``_ivfpq_index`` builds it;
+    ``_read_index`` loads the same value from its persisted frames."""
+    corpus: DataFrame
+    cent: Centroids
+    cb: Codebook
+
+
+def _serve_local_frames(qdf: DataFrame, index: IvfPqIndex, nprobe: int):
+    """(qlocal, qprobe, dtab, probed) for a small query batch: three
+    LOCAL frames plus the sorted probed-cid list, or None when a gate
+    trips (big query frame / centroids without a bank) and the JVM
+    twins must run. One ``limit(cap+1).collect()`` job replaces the
+    probe and dtab Spark subplans: their inputs (queries, and the
+    index's centroid and codebook banks) are driver-bounded by
+    construction, their outputs are metadata-sized, and as
+    LocalTableScan leaves they broadcast without a job and add nothing
+    to plan compilation — the r13 serve regression was exactly this
+    fixed overhead (~6 jobs and ~0.7 s of optimizer time per pass
+    around ~5k result rows). ``qemb`` is materialized as array<double>
+    — the exact float→double widenings the JVM cast produces — so the
+    re-rank's ``_exact_d2fx`` sees identical operands."""
+    bank = index.cent.bank
     if bank is None:
         return None
     qrows = (qdf.select("vec_id", "embedding")
                 .limit(_SERVE_DRIVER_MAX_Q + 1).collect())
     if len(qrows) > _SERVE_DRIVER_MAX_Q:
         return None
-    cbrows = getattr(cb, "_graft_cb_rows", None)
-    if cbrows is None:   # frame arrived from storage: one bounded collect
-        cbrows = cb.select("m", "k", "cw").collect()  # <= M*K rows
     spark = qdf.sparkSession
 
     def values_frame(rows, cols, schema):
@@ -2767,6 +2773,7 @@ def _serve_local_frames(qdf: DataFrame, cent: DataFrame, cb: DataFrame,
         names = ", ".join(f"col{i + 1} AS {c}" for i, c in enumerate(cols))
         return spark.sql(f"SELECT {names} FROM VALUES {txt}")
 
+    probes = _probe_rows_np(qrows, bank, nprobe)
     qlocal = values_frame(
         [(f"{int(r['vec_id'])}L",
           "array(" + ",".join(_sql_double(float(x))
@@ -2774,36 +2781,29 @@ def _serve_local_frames(qdf: DataFrame, cent: DataFrame, cb: DataFrame,
          for r in qrows],
         ["q_vec_id", "qemb"], "q_vec_id long, qemb array<double>")
     qprobe = values_frame(
-        [(f"{q}L", f"{cid}L", str(pr))
-         for (q, cid, pr) in _probe_rows_np(qrows, bank, nprobe)],
+        [(f"{q}L", f"{cid}L", str(pr)) for (q, cid, pr) in probes],
         ["q_vec_id", "cid", "pr"], "q_vec_id long, cid long, pr int")
     dtab = values_frame(
         [(f"{q}L", str(m), str(k), f"{dfx}L")
-         for (q, m, k, dfx) in _dtab_rows_np(qrows, cbrows)],
+         for (q, m, k, dfx) in _dtab_rows_np(qrows, index.cb.banks)],
         ["dq", "qm", "k", "dfx"], "dq long, qm int, k int, dfx long")
-    return qlocal, qprobe, dtab
+    return qlocal, qprobe, dtab, sorted({cid for (_, cid, _) in probes})
 
 
-def _pq_codes_with_cid(cells: DataFrame, cb: DataFrame) -> DataFrame:
+def _pq_codes_with_cid(cells: DataFrame, cb: Codebook) -> DataFrame:
     """(vec_id, cid, m, code): PQ code assignment carrying the IVF cell
-    id(s) through ONE corpus pass — computing codes and cells separately
-    and equi-joining them on vec_id would shuffle the corpus twice; the
-    cell ids ride the code-argmin groupBy instead. With multi-assignment
-    (``cells`` holds ``_IVF_NASSIGN`` rows per vector) the distance
-    argmin is recomputed per replica — redundant compute on a narrow
-    frame, bought to keep the corpus shuffle-free. r13: the coding runs
-    as the Arrow-batched numpy twin (``_pq_code_batches``) — zero
-    shuffles at all now (the old crossJoin → groupBy argmin shuffled
-    the n·nassign·M·K pair frame into an aggregate; measured ~10 s of
-    per-pair expression evaluation at sf0.1)."""
-    banks = _pq_code_banks(cb)
+    id(s) of ``cells`` (``_IVF_NASSIGN`` rows per vector under
+    multi-assignment) through one Arrow coding pass that recomputes the
+    code argmin per replica. ``_ivfpq_index``'s fused pass replaced this
+    chain (``_ivf_assign`` → here); it stays as the two-pass reference
+    the fused pass is pinned against in tests/test_opt_r14.py."""
     return (cells.select("vec_id", "cid", "embedding")
-                 .mapInArrow(_pq_code_batches(banks, with_cid=True),
-                             "vec_id long, cid long, m int, code long"))
+                 .mapInArrow(_pq_code_batches(cb.banks, with_cid=True),
+                             _CODES_SCHEMA))
 
 
-def _ivfpq_adc_frame(qdf: DataFrame, corpus: DataFrame, cent: DataFrame,
-                     cb: DataFrame, nprobe: int, local=None) -> DataFrame:
+def _ivfpq_adc_frame(qdf: DataFrame, index: IvfPqIndex, nprobe: int,
+                     local) -> DataFrame:
     """(q_vec_id, c_vec_id, pr, adfx): score an arbitrary query frame
     ((vec_id, embedding) rows) against a PREBUILT coded index — the ADC
     half of the serving path, shared by the batch ops and the streaming
@@ -2811,21 +2811,26 @@ def _ivfpq_adc_frame(qdf: DataFrame, corpus: DataFrame, cent: DataFrame,
     through more than one probed cell before the ADC sum (multi-assigned
     corpus rows would otherwise double-count).
 
-    r14: small query batches take the driver fast path — the probe and
-    distance-table frames arrive as LocalTableScan leaves
-    (``_serve_local_frames``; bit-identical numpy twins) instead of as
-    crossJoin/window subplans, removing their jobs and their plan-
-    compilation cost from every serve pass. ``local`` lets
-    ``_ivfpq_serve_topk`` share one gate decision across ADC + re-rank."""
-    if local is None:
-        local = _serve_local_frames(qdf, cent, cb, nprobe)
+    r14: small query batches take the driver fast path — ``local`` is
+    ``_serve_local_frames``' result (None: the JVM probe and
+    distance-table subplans run), so its probe and distance-table
+    frames arrive as LocalTableScan leaves (bit-identical numpy twins),
+    removing their jobs and their plan-compilation cost from every serve
+    pass. Its probed-cid list also filters the corpus statically: on
+    the persisted cid-partitioned layout that prunes the scan to the
+    probed cells' directories (VERDICT r6 #2; PartitionFilters
+    ``cid IN (...)``, pinned in tests/test_plans.py), and it is a no-op
+    on the values — the probe join below keeps the same cells."""
+    corpus = index.corpus
     if local is not None:
-        _, qprobe, dtab = local
+        _, qprobe, dtab, probed = local
+        corpus = corpus.filter(F.col("cid").isin(probed))
     else:
-        qprobe = _ivf_probe(qdf, cent, nprobe)
+        qprobe = _ivf_probe(qdf, index.cent.frame, nprobe)
         q = qdf.select(F.col("vec_id").alias("q_vec_id"),
                        F.col("embedding").alias("qemb"))
-        dtab = _pq_dtab_frame(q, cb).withColumnRenamed("q_vec_id", "dq")
+        dtab = _pq_dtab_frame(q, index.cb.frame) \
+            .withColumnRenamed("q_vec_id", "dq")
     cand = (corpus.join(F.broadcast(qprobe), "cid")
                   .filter(F.col("vec_id") != F.col("q_vec_id")))
     # r13: ONE aggregation instead of the (q, c, m)-then-(q, c) pair —
@@ -2847,13 +2852,13 @@ def _ivfpq_adc_frame(qdf: DataFrame, corpus: DataFrame, cent: DataFrame,
                       .alias("adfx")))
 
 
-def _ivfpq_serve_topk(qdf: DataFrame, corpus: DataFrame, cent: DataFrame,
-                      cb: DataFrame, e: DataFrame,
+def _ivfpq_serve_topk(qdf: DataFrame, index: IvfPqIndex, e: DataFrame,
                       nprobe: int | None = None) -> DataFrame:
     """The full serving cascade against a prebuilt index: IVF probe ->
     ADC shortlist -> exact re-rank -> top-5 with probe rank. Shared by
-    ``sim_ivfpq_topk`` and the streaming server ``stream_ann_serving``
-    (which calls it per micro-batch with the static index frames).
+    ``sim_ivfpq_topk``, ``sim_ann_serve_persisted`` (on the loaded
+    index) and the streaming server ``stream_ann_serving`` (which calls
+    it per micro-batch with the static index).
 
     ``nprobe=None`` (the serving default since r8) auto-scales with the
     index: ``_ivf_nprobe(_ivf_nlist(|e|))`` — one parquet-metadata count
@@ -2862,8 +2867,8 @@ def _ivfpq_serve_topk(qdf: DataFrame, corpus: DataFrame, cent: DataFrame,
     cell count instead of sagging at fixed nprobe=2 (VERDICT r7 #1)."""
     if nprobe is None:
         nprobe = _ivf_nprobe(_ivf_nlist(e.count()))
-    local = _serve_local_frames(qdf, cent, cb, nprobe)
-    scored = _ivfpq_adc_frame(qdf, corpus, cent, cb, nprobe, local=local)
+    local = _serve_local_frames(qdf, index, nprobe)
+    scored = _ivfpq_adc_frame(qdf, index, nprobe, local)
     q = local[0] if local is not None else \
         qdf.select(F.col("vec_id").alias("q_vec_id"),
                    F.col("embedding").alias("qemb"))
@@ -2873,9 +2878,9 @@ def _ivfpq_serve_topk(qdf: DataFrame, corpus: DataFrame, cent: DataFrame,
                     F.col("pr").alias("probe_rank"), "rnk"))
 
 
-def _ivfpq_index(e: DataFrame) -> tuple:
-    """(corpus, cent, cb): the composed index — capped-trained centroids,
-    multi-assigned inverted lists carrying trained PQ codes."""
+def _ivfpq_index(e: DataFrame) -> IvfPqIndex:
+    """The composed index — capped-trained centroids, trained PQ
+    codebooks, and the multi-assigned inverted lists carrying codes."""
     # r13: ONE count + ONE TakeOrderedAndProject collect feed BOTH
     # trainers — the md5-ordered sample's prefixes are exactly what each
     # trainer's own collect would return (same (hv, vec_id) total
@@ -2894,19 +2899,13 @@ def _ivfpq_index(e: DataFrame) -> tuple:
         cent = _ivf_train_capped(e, n=n)
         cb = _pq_codebook(e)
     # r14: one fused Arrow pass assigns cells AND codes (embeddings
-    # cross the Python boundary once, replicas are not re-coded); the
-    # two-pass twins remain the fallback for unbanked frames.
-    bank = _cent_bank(cent)
-    banks = _pq_code_banks(cb)
-    if bank is not None and banks:
-        cids, C = bank
-        corpus = e.select("vec_id", "embedding").mapInArrow(
-            _assign_code_batches(cids, C, _IVF_NASSIGN, banks),
-            "vec_id long, cid long, m int, code long")
-    else:
-        corpus = _pq_codes_with_cid(
-            _ivf_assign(e, cent, nprobe=_IVF_NASSIGN), cb)
-    return corpus, cent, cb
+    # cross the Python boundary once, replicas are not re-coded). The
+    # nlist clamp keeps every capped centroid bank under
+    # _ASSIGN_BANK_MAX_ROWS, so the bank is always there.
+    cids, C = cent.bank
+    corpus = e.select("vec_id", "embedding").mapInArrow(
+        _assign_code_batches(cids, C, _IVF_NASSIGN, cb.banks), _CODES_SCHEMA)
+    return IvfPqIndex(corpus, cent, cb)
 
 
 @op("sim_ivfpq_topk", oracle=f"""
@@ -2934,18 +2933,17 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the auto point: >= 0.5 at every audited scale (SCALE.md round-8
     table; pinned for the audit corpora in tests/test_ivf.py).
 
-    Scale shape: ONE corpus pass assigns cells + codes together
-    (``_pq_codes_with_cid`` — a second vec_id join would shuffle the
-    corpus twice); probes, ADC tables and the re-rank shortlist
+    Scale shape: ONE Arrow corpus pass assigns cells + codes together
+    (``_ivfpq_index``'s fused ``_assign_code_batches`` — no vec_id join,
+    no shuffle); probes, ADC tables and the re-rank shortlist
     broadcast; the only corpus-sized aggregates are the candidate ADC
     sum and its per-(q, c, m) dedup pre-aggregate. Fixed-point
     everywhere, so the composed ranking is exact-integer cross-engine.
     ``probe_rank`` reports which probe found each hit — the observable
     trace of the nprobe dial."""
     e = load(spark, sf_dir, "embeddings")
-    corpus, cent, cb = _ivfpq_index(e)
     return _ivfpq_serve_topk(e.filter(F.col("vec_id") < _N_QUERIES),
-                             corpus, cent, cb, e)
+                             _ivfpq_index(e), e)
 
 
 @op("sim_ivfpq_recall_eval", oracle=f"""
@@ -2991,11 +2989,12 @@ def sim_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-query, fixed-point discipline as the LSH/IVF/PQ evals; the
     cross-engine value check covers the measurement itself."""
     e = load(spark, sf_dir, "embeddings")
-    corpus, cent, cb = _ivfpq_index(e)
+    index = _ivfpq_index(e)
     qdf = e.filter(F.col("vec_id") < _EVAL_QUERIES)
     q = qdf.select(F.col("vec_id").alias("q_vec_id"),
                    F.col("embedding").alias("qemb"))
-    scored = _ivfpq_adc_frame(qdf, corpus, cent, cb, nprobe=2)
+    scored = _ivfpq_adc_frame(qdf, index, 2,
+                              _serve_local_frames(qdf, index, 2))
     top2 = (_exact_rerank(_pq_shortlist(scored), q, e)
             .select("q_vec_id", "c_vec_id").withColumn("h2", F.lit(1)))
     top1 = (_exact_rerank(_pq_shortlist(scored.filter("pr = 1")), q, e)
@@ -3071,7 +3070,7 @@ def sim_ivf_incremental_assign(spark: SparkSession,
     cent = _ivf_train_capped(old)
     occ = (_ivf_assign(old, cent)
            .groupBy("cid").agg(F.count("*").alias("n_old")))
-    bassign = _ivf_assign(batch, cent, arrow=False).select("vec_id", "cid")
+    bassign = _ivf_assign_jvm(batch, cent.frame).select("vec_id", "cid")
     return (bassign.join(F.broadcast(occ), "cid", "left")
                    .select("vec_id", "cid",
                            F.coalesce("n_old", F.lit(0)).cast("long")
@@ -3884,21 +3883,34 @@ def _index_scratch(spark: SparkSession, key: str) -> str:
     return os.path.join(SCRATCH, "ann_index", app, key)
 
 
-def _write_index(e: DataFrame, base: str) -> tuple:
-    """Write the composed index's three frames: centroids and codebook as
-    plain parquet (tiny, broadcast at serve time), the coded corpus
-    PARTITIONED BY cid — the on-disk inverted-list layout, so a serving
-    scan of nprobe cells reads only those cells' files (partition
-    pruning; at cluster scale each cell is its own directory of
-    row-group-sized files). Returns the three frames' SCHEMAS — readers
-    must pass them explicitly (an empty corpus writes a fileless
-    directory, and schema inference cannot read one back)."""
-    corpus, cent, cb = _ivfpq_index(e)
-    cent.write.mode("overwrite").parquet(f"{base}/centroids")
-    cb.write.mode("overwrite").parquet(f"{base}/codebook")
-    corpus.write.mode("overwrite").partitionBy("cid") \
-          .parquet(f"{base}/corpus")
-    return corpus.schema, cent.schema, cb.schema
+def _write_index(e: DataFrame, base: str) -> None:
+    """Build the composed index and write its three frames: centroids
+    and codebook as plain parquet (tiny, collected into their banks at
+    load), the coded corpus PARTITIONED BY cid — the on-disk
+    inverted-list layout, so a serving scan of nprobe cells reads only
+    those cells' files (partition pruning; at cluster scale each cell is
+    its own directory of row-group-sized files)."""
+    index = _ivfpq_index(e)
+    index.cent.frame.write.mode("overwrite").parquet(f"{base}/centroids")
+    index.cb.frame.write.mode("overwrite").parquet(f"{base}/codebook")
+    index.corpus.write.mode("overwrite").partitionBy("cid") \
+         .parquet(f"{base}/corpus")
+
+
+def _read_index(spark: SparkSession, base: str) -> IvfPqIndex:
+    """The index ``_write_index`` persisted under ``base``, as the value
+    ``_ivfpq_index`` returns: the corpus frame scans the cid-partitioned
+    inverted lists; centroids (≤ ``_IVF_NLIST_CEIL`` rows, so under the
+    bank gate) and codebook (≤ M·K rows) are collected once into their
+    banks. Reads pass the fixed schemas: an empty corpus writes a
+    fileless directory, and schema inference cannot read one back."""
+    def rd(name, schema):
+        return spark.read.schema(schema).parquet(f"{base}/{name}")
+    cent, cb = rd("centroids", _CENT_SCHEMA), rd("codebook", _CB_SCHEMA)
+    return IvfPqIndex(
+        rd("corpus", _CODES_SCHEMA).select("vec_id", "cid", "m", "code"),
+        Centroids(cent, _bank_of(cent.collect())),
+        Codebook(cb, _pq_code_banks(cb.collect())))
 
 
 @op("sim_index_persist", oracle=f"""
@@ -3936,11 +3948,11 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     base = _index_scratch(spark, "persist")
     shutil.rmtree(base, ignore_errors=True)
-    corpus_s, cent_s, cb_s = _write_index(e, base)
-    rd = lambda name, sch: spark.read.schema(sch).parquet(f"{base}/{name}")
-    sizes = [("centroids", rd("centroids", cent_s).count()),
-             ("codebook", rd("codebook", cb_s).count()),
-             ("corpus", rd("corpus", corpus_s).count())]
+    _write_index(e, base)
+    index = _read_index(spark, base)
+    sizes = [("centroids", len(index.cent.bank[0])),
+             ("codebook", sum(len(ks) for ks, _ in index.cb.banks.values())),
+             ("corpus", index.corpus.count())]
     return spark.createDataFrame(sizes, "frame string, n_rows long") \
                 .orderBy("frame")
 
@@ -3950,11 +3962,14 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_serve_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SERVE FROM THE PERSISTED INDEX: build + write the index frames
     once (the `sim_index_persist` step), then answer the standard
-    8-query batch touching ONLY the re-read parquet artifacts — the
-    corpus side enters the plan as a scan of the cid-partitioned
-    inverted lists, so the probed-cell filter prunes at the FILE level,
-    which is the entire point of the layout at 100 TB (a query batch
-    reads nprobe cells' directories, not the corpus).
+    8-query batch touching ONLY the re-read parquet artifacts
+    (``_read_index``: centroid and codebook banks collected once per
+    call) — the corpus side enters the plan as a scan of the
+    cid-partitioned inverted lists. The serve path computes the query
+    probes on the driver and pushes them as a static ``cid IN (...)``
+    filter, so the scan prunes at the FILE level, which is the entire
+    point of the layout at 100 TB (a query batch reads nprobe cells'
+    directories, not the corpus).
 
     REUSES `sim_ivfpq_topk`'s oracle VERBATIM: the persisted round-trip
     must be byte-equivalent to the inline plan (schema evolution, cid
@@ -3967,39 +3982,9 @@ def sim_ann_serve_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     base = _index_scratch(spark, "serve")
     shutil.rmtree(base, ignore_errors=True)
-    corpus_s, cent_s, cb_s = _write_index(e, base)
-    cent = spark.read.schema(cent_s).parquet(f"{base}/centroids")
-    cb = spark.read.schema(cb_s).parquet(f"{base}/codebook")
-    qdf = e.filter(F.col("vec_id") < _N_QUERIES)
-    # VERDICT r6 #2 — make the cid-partitioned layout actually PRUNE:
-    # the serving tier derives its probe list first (nq x nprobe cells,
-    # a handful of ints on the driver — the one list a serving node
-    # always knows) and pushes it as a STATIC IN-list predicate on the
-    # partition column, so the corpus scan reads ONLY the probed cells'
-    # directories (PartitionFilters: cid IN (...), pinned in
-    # tests/test_plans.py). Without it the probe join is dynamic and
-    # nothing file-prunes. Semantically a no-op: the downstream join on
-    # cid already restricts candidates to probed cells, so the oracle
-    # stays verbatim `sim_ivfpq_topk`.
-    np_auto = _ivf_nprobe(_ivf_nlist(e.count()))
-    # r14: the probe list comes from the driver numpy twin when the
-    # query batch fits the serve gate (one collect instead of the
-    # crossJoin/window/distinct job); the JVM probe stays the fallback.
-    bank = _cent_bank(cent)
-    qrows = (qdf.select("vec_id", "embedding")
-                .limit(_SERVE_DRIVER_MAX_Q + 1).collect()
-             if bank is not None else [])
-    if bank is not None and len(qrows) <= _SERVE_DRIVER_MAX_Q:
-        probed = sorted({cid for (_, cid, _)
-                         in _probe_rows_np(qrows, bank, np_auto)})
-    else:
-        probed = sorted({r["cid"] for r in
-                         _ivf_probe(qdf, cent, nprobe=np_auto)
-                         .select("cid").distinct().collect()})
-    corpus = (spark.read.schema(corpus_s).parquet(f"{base}/corpus")
-              .filter(F.col("cid").isin(probed))
-              .select("vec_id", "cid", "m", "code"))
-    return _ivfpq_serve_topk(qdf, corpus, cent, cb, e, nprobe=np_auto)
+    _write_index(e, base)
+    return _ivfpq_serve_topk(e.filter(F.col("vec_id") < _N_QUERIES),
+                             _read_index(spark, base), e)
 
 
 # --------------------------------------------------------------------------
@@ -4473,7 +4458,7 @@ def _twolevel_index(old: DataFrame, occ: int = _SEMDEDUP_OCC) -> tuple:
     # path keeps the lazy win: it drops subcent unused).
     subcent.count()
     old_cells.unpersist()
-    return cent, subcent, sub
+    return cent.frame, subcent, sub
 
 
 def _semantic_ingest_pairs(batch: DataFrame, cent: DataFrame,
@@ -4488,7 +4473,7 @@ def _semantic_ingest_pairs(batch: DataFrame, cent: DataFrame,
     Norms hoisted per side (same association as the oracle, see
     `_semantic_pairs`)."""
     nrm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-    b_sub = _sub_assign(_ivf_assign(batch, cent, arrow=False),
+    b_sub = _sub_assign(_ivf_assign_jvm(batch, cent),
                         subcent).select(
         "vec_id", F.col("embedding").alias("bemb"), "cid", "scid",
         nrm.alias("_nb"))

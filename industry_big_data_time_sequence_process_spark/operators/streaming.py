@@ -466,14 +466,14 @@ def stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
     e = load(spark, sf_dir, "embeddings")
-    corpus, cent, cb = _ivfpq_index(e)
+    index = _ivfpq_index(e)
     # resolve the auto-scaled probe count ONCE at serve-loop setup (a
     # serving node sizes its dial when it loads the index, not per batch)
     np_auto = _ivf_nprobe(_ivf_nlist(e.count()))
 
     def serve(batch_df: DataFrame, batch_id: int) -> None:
         top5 = _ivfpq_serve_topk(batch_df.select("vec_id", "embedding"),
-                                 corpus, cent, cb, e, nprobe=np_auto)
+                                 index, e, nprobe=np_auto)
         top5.write.mode("overwrite").parquet(
             os.path.join(out, f"batch_id={batch_id}"))
 

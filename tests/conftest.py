@@ -32,6 +32,9 @@ def spark():
 SLOWWAVE_KEYS = frozenset({
     "sim_twolevel_recall_eval", "doc_tokenize_bpe64",
     "pipeline_corpus_audit", "ts_holt_winters", "sim_mmr_diversify",
+    # re-measured once the IVF+PQ index became an explicit value: warm
+    # parity 10.2-10.7 s at sf0.01 (4 vCPU). The other IVF/IVFPQ keys
+    # measured 0.8-5.3 s warm and run in the default suite again.
     "sim_ivfpq_recall_eval", "ts_interpolate_sql",
     "doc_pack_nextfit_merged", "doc_truncate_budget_merged",
     "text_bpe_train", "ts_ewma_timedecay",
@@ -39,11 +42,8 @@ SLOWWAVE_KEYS = frozenset({
     # key >= ~6 s; the txn-log family is covered by the prefix rule):
     "text_langid_calibration", "text_langid_model",
     "text_quality_calibration", "text_quality_model",
-    "source_stream_file", "text_bpe_lite", "sim_ivfpq_topk",
-    "sim_ivf_topk_nprobe2", "sim_ivf_recall_eval", "sim_ivf_topk",
-    "sim_ivf_scalable_topk", "sim_ivf_incremental_assign",
-    "sim_index_persist", "sim_ann_serve_persisted",
-    "text_rake_keywords", "dedup_cluster_cc_star", "dedup_cluster_cc",
+    "source_stream_file", "text_bpe_lite", "text_rake_keywords",
+    "dedup_cluster_cc_star", "dedup_cluster_cc",
     "text_bm25_retrieval", "text_ngram_novelty", "text_decontaminate",
     "dedup_incremental_minhash", "text_lang_confusion",
     "agg_ab_power_mde", "dedup_lsh_tuning_curve", "sim_label_agreement",

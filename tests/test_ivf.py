@@ -233,18 +233,20 @@ def _auto_operating_point(spark, sf_dir: str) -> tuple[float, float, int]:
 
     from industry_big_data_time_sequence_process_spark.operators.similarity import (
         _ivf_nprobe as nprobe_fn, _ivfpq_adc_frame, _ivfpq_index,
-        _exact_rerank, _pq_shortlist, _pq_truth,
+        _exact_rerank, _pq_shortlist, _pq_truth, _serve_local_frames,
     )
     from industry_big_data_time_sequence_process_spark.sources.io import load
 
     e = load(spark, sf_dir, "embeddings")
     n = e.count()
     np_auto = nprobe_fn(_ivf_nlist(n))
-    corpus, cent, cb = _ivfpq_index(e)
+    index = _ivfpq_index(e)
     qdf = e.filter(F.col("vec_id") < _EVAL_QUERIES)
     q = qdf.select(F.col("vec_id").alias("q_vec_id"),
                    F.col("embedding").alias("qemb"))
-    scored = _ivfpq_adc_frame(qdf, corpus, cent, cb, np_auto).cache()
+    scored = _ivfpq_adc_frame(
+        qdf, index, np_auto,
+        _serve_local_frames(qdf, index, np_auto)).cache()
     n_scanned = scored.count()
     top = (_exact_rerank(_pq_shortlist(scored), q, e)
            .select("q_vec_id", "c_vec_id"))

@@ -27,7 +27,7 @@ def test_pq_codebook_driver_equals_distributed(spark):
     codeword, every component, exactly equal (IEEE-double identity —
     the fixed-point discipline makes both order-invariant)."""
     e = load(spark, SF_T2, "embeddings")
-    a = _pq_codebook(e)
+    a = _pq_codebook(e).frame
     b = _pq_codebook_dist(e)
     ra = _rows(a, ["m", "k", "cw"])
     rb = _rows(b, ["m", "k", "cw"])
@@ -39,16 +39,20 @@ def test_pq_codebook_driver_equals_distributed(spark):
 def test_ivf_train_capped_driver_equals_distributed(spark, monkeypatch):
     """Forcing the pair budget to 0 routes _ivf_train_capped through the
     distributed _lloyd; the default routes it through the numpy twin.
-    Both centroid sets must match exactly, cid for cid."""
+    Both centroid sets must match exactly, cid for cid, and so must the
+    banks the two paths carry (built in memory vs collected)."""
+    import numpy as np
     e = load(spark, SF_T2, "embeddings")
     a = _ivf_train_capped(e)
-    ra = _rows(a, ["cid", "cemb"])
-    a.unpersist()
+    ra = _rows(a.frame, ["cid", "cemb"])
+    a.frame.unpersist()
     monkeypatch.setattr(S, "_DRIVER_TRAIN_MAX_PAIRS", 0)
     b = _ivf_train_capped(e)
-    rb = _rows(b, ["cid", "cemb"])
-    b.unpersist()
+    rb = _rows(b.frame, ["cid", "cemb"])
+    b.frame.unpersist()
     assert len(ra) > 0 and ra == rb
+    assert np.array_equal(a.bank[0], b.bank[0])
+    assert np.array_equal(a.bank[1], b.bank[1])
 
 
 @pytest.mark.smoke
@@ -61,8 +65,8 @@ def test_pq_codes_arrow_equals_jvm(spark):
     e = load(spark, SF_T2, "embeddings")
     cb = _pq_codebook(e)
     ra = _rows(_pq_codes(e, cb), ["vec_id", "m", "code"])
-    rb = _rows(_pq_codes_jvm(e, cb), ["vec_id", "m", "code"])
-    cb.unpersist()
+    rb = _rows(_pq_codes_jvm(e, cb.frame), ["vec_id", "m", "code"])
+    cb.frame.unpersist()
     assert len(ra) > 0 and ra == rb
 
 
@@ -102,7 +106,7 @@ def test_ivf_assign_agg_equals_window_pick(spark):
     norm_e = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
     norm_c = F.sqrt(_dot(F.col("cemb"), F.col("cemb")))
     ev = e.select("vec_id", "embedding", norm_e.alias("_nv"))
-    cv = cent.select("cid", "cemb", norm_c.alias("_nc"))
+    cv = cent.frame.select("cid", "cemb", norm_c.alias("_nc"))
     w = Window.partitionBy("vec_id").orderBy(F.col("_c").desc(), "cid")
     for nprobe in (1, 3):
         legacy = (ev.crossJoin(F.broadcast(cv))
@@ -114,7 +118,7 @@ def test_ivf_assign_agg_equals_window_pick(spark):
         got = _ivf_assign(e, cent, nprobe=nprobe)
         assert _rows(got, ["vec_id", "cid"]) == \
             _rows(legacy, ["vec_id", "cid"]), f"nprobe={nprobe}"
-    cent.unpersist()
+    cent.frame.unpersist()
 
 
 @pytest.mark.smoke
@@ -130,10 +134,10 @@ def test_ivf_assign_arrow_equals_jvm(spark):
     for nprobe in (1, 3):
         ra = _rows(_ivf_assign(e, cent, nprobe),
                    ["vec_id", "cid", "embedding"])
-        rb = _rows(_ivf_assign_jvm(e, cent, nprobe),
+        rb = _rows(_ivf_assign_jvm(e, cent.frame, nprobe),
                    ["vec_id", "cid", "embedding"])
         assert len(ra) > 0 and ra == rb, f"nprobe={nprobe}"
-    cent.unpersist()
+    cent.frame.unpersist()
 
 
 @pytest.mark.smoke

@@ -387,10 +387,11 @@ def test_persisted_serve_scans_index_not_recompute(spark):
     corpus inverted lists never shuffle to meet an 8-query batch.
 
     r14: the centroids and codebook artifacts are consumed by the
-    driver-side serve fast path (collected once per serve, probe and
-    distance tables inlined as LocalTableScan leaves), so they no
-    longer appear as scans INSIDE the serve plan — the plan-level
-    contract is now: persisted-corpus scan present, no code
+    driver-side serve fast path (``_read_index`` collects them into
+    their banks once per serve, probe and distance tables are inlined
+    as LocalTableScan leaves), so they no longer appear as scans
+    INSIDE the serve plan — the plan-level contract is now:
+    persisted-corpus scan present, no code
     re-derivation (no MapInArrow coding pass), local-relation
     probe/dtab broadcasts."""
     plan = _plan(spark, "sim_ann_serve_persisted", "simple")

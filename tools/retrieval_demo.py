@@ -51,7 +51,7 @@ def build_index(e: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     one corpus pass each, both quantizers trained at capped cost."""
     cells = _ivf_cells_scalable(e).select("vec_id", "cid")
     cb = _pq_codebook(e)
-    return cells, cb, _pq_codes(e, cb)
+    return cells, cb.frame, _pq_codes(e, cb)
 
 
 def serve_cascade(e: DataFrame, cells: DataFrame, cb: DataFrame,
