@@ -11,7 +11,12 @@ Streaming sources/sinks live in ``streaming.py``.
 """
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import shutil
+import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -521,49 +526,89 @@ def compact_parquet_tree(spark: SparkSession, staged: str,
     (back.repartition(target_files)
          .write.mode("overwrite").parquet(compacted))
 
-    def canon(df: DataFrame):
-        # order-invariant exact identity: per-row md5 over every column
-        # (timestamps canonicalized to micros, doubles to their exact
-        # repr via CAST to string), 15 hex chars -> long, SUM of longs.
-        # coalesce each column to a sentinel BEFORE concat_ws: concat_ws
-        # silently drops NULL args, so (NULL,'x') and ('x',NULL) would
-        # otherwise hash identically (ADVICE r9) — the sentinel encodes
-        # NULLs positionally and the \x01 separator keeps fields distinct.
-        cols = F.concat_ws(
-            "\x01", *[F.coalesce(F.col(c).cast("string"), F.lit("<NULL>"))
-                      for c in sorted(df.columns)])
-        h = (F.conv(F.substring(F.md5(cols), 1, 15), 16, 10)
-             .cast("decimal(38,0)"))  # exact sum, no ANSI long overflow
-        return df.agg(F.count("*").alias("n"), F.sum(h).alias("hsum"))
-
-    b = canon(back).collect()[0]
-    comp = spark.read.schema(schema).parquet(compacted)
-    a = canon(comp).collect()[0]
+    b = _txn_canon(back)
+    a = _txn_canon(spark.read.schema(schema).parquet(compacted))
     n_files = len([f for f in os.listdir(compacted)
                    if f.endswith(".parquet")])
     return {
-        "rows_before": int(b["n"]), "rows_after": int(a["n"]),
+        "rows_before": b[0], "rows_after": a[0],
         "n_files": n_files,
-        "value_match": int(b["hsum"] == a["hsum"] and b["n"] == a["n"]),
+        "value_match": int(b == a),
         "files_bounded": int(n_files <= target_files
-                             and (n_files > 0 or b["n"] == 0)),
+                             and (n_files > 0 or b[0] == 0)),
     }
+
+
+def _txn_canon(df: DataFrame) -> tuple:
+    """Order-invariant exact content identity, collected: ``(n_rows,
+    hsum)``. Per-row md5 over every column (timestamps canonicalized to
+    micros, doubles to their exact repr via CAST to string), 15 hex
+    chars -> long, exact decimal SUM. Two frames hold the same rows iff
+    their identities compare equal."""
+    # coalesce each column to a sentinel BEFORE concat_ws: concat_ws
+    # silently drops NULL args, so (NULL,'x') and ('x',NULL) would
+    # otherwise hash identically (ADVICE r9) — the sentinel encodes
+    # NULLs positionally and the \x01 separator keeps fields distinct.
+    cols = F.concat_ws(
+        "\x01", *[F.coalesce(F.col(c).cast("string"), F.lit("<NULL>"))
+                  for c in sorted(df.columns)])
+    h = (F.conv(F.substring(F.md5(cols), 1, 15), 16, 10)
+         .cast("decimal(38,0)"))  # exact sum, no ANSI long overflow
+    r = df.agg(F.count("*").alias("n"), F.sum(h).alias("hsum")).collect()[0]
+    return int(r["n"]), r["hsum"]
 
 
 # ==========================================================================
 # Round-10 sixth wave (SURVEY.md §2.35)
 # ==========================================================================
 
-#: Commits of the transaction-log demo: version -> (adds, removes) of
-#: COMMIT DIRECTORIES (the log tracks whole immutable commit dirs, so
-#: snapshot resolution is pure set arithmetic over the manifests —
-#: parquet part-file names inside a commit are engine-chosen and never
-#: appear in the log).
-_TXN_COMMITS = {
-    1: (["v1"], []),          # initial load: event_id % 3 == 0
-    2: (["v2"], []),          # append:       event_id % 3 == 1
-    3: (["v3"], ["v1"]),      # rewrite v1's rows into v3, retire v1
-}
+def _txn_table(key: str) -> tuple[str, str]:
+    """A fresh transaction-log table for op ``key``: wipes its staging
+    tree (every run rebuilds the same bytes — the ops' idempotency) and
+    returns ``(data_root, log_dir)`` with the log dir created."""
+    base = _scratch(key)
+    if os.path.exists(base):
+        shutil.rmtree(base)
+    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
+    os.makedirs(log)
+    return data, log
+
+
+def _txn_read(spark: SparkSession, data: str, dirs: list[str],
+              schema) -> DataFrame:
+    """Snapshot read: one multi-dir parquet scan over the commit dirs
+    the log resolved. Zero dirs read as an empty frame of ``schema``."""
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(data, d) for d in dirs])
+
+
+def _txn_append(df: DataFrame, data: str, log: str, version: int,
+                name: str, removes: list[str] | tuple = (),
+                extra: dict | None = None) -> None:
+    """Write ``df`` as the immutable commit dir ``name`` (one file) and
+    commit it as ``version``, retiring ``removes``."""
+    df.repartition(1).write.mode("overwrite").parquet(
+        os.path.join(data, name))
+    txn_commit(log, version, [name], list(removes), extra=extra)
+
+
+def _txn_stage_rewrite_history(spark: SparkSession, ev: DataFrame,
+                               data: str, log: str,
+                               ts_base: int | None = None) -> None:
+    """The 3-commit time-travel history: v1 loads event_id % 3 == 0,
+    v2 appends % 3 == 1, v3 REWRITES v1's committed bytes into a fresh
+    dir and retires v1 (the compaction shape). The log tracks whole
+    immutable commit dirs, so snapshot resolution is pure set arithmetic
+    over the manifests. With ``ts_base`` commit v is stamped
+    ``ts_base + 100*v``."""
+    def stamp(v: int) -> dict | None:
+        return None if ts_base is None else {"ts": ts_base + 100 * v}
+
+    for v in (1, 2):
+        _txn_append(ev.filter(F.col("event_id") % 3 == v - 1), data, log,
+                    v, f"v{v}", extra=stamp(v))
+    _txn_append(_txn_read(spark, data, ["v1"], ev.schema), data, log, 3,
+                "v3", ["v1"], extra=stamp(3))
 
 
 @op("sink_txn_log_snapshot", oracle="""
@@ -605,61 +650,19 @@ def sink_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     dirs, so time travel costs nothing at read time beyond listing.
     Idempotent: every stage overwrites (re-run after a crash rewrites
     the same bytes)."""
-    import json as _json
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_log_snapshot")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
-
-    slices = {
-        "v1": ev.filter(F.col("event_id") % 3 == 0),
-        "v2": ev.filter(F.col("event_id") % 3 == 1),
-    }
-    slices["v1"].repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v1"))
-    slices["v2"].repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v2"))
-    # v3 = the rewrite commit: re-read v1's committed bytes and rewrite
-    v1_back = spark.read.schema(ev.schema).parquet(os.path.join(data, "v1"))
-    v1_back.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v3"))
-    for v, (adds, removes) in _TXN_COMMITS.items():
-        with open(os.path.join(log, f"{v}.json"), "w") as f:
-            _json.dump({"version": v, "add": adds, "remove": removes}, f)
-
-    def active(version: int) -> list[str]:
-        dirs: set[str] = set()
-        for v in range(1, version + 1):
-            with open(os.path.join(log, f"{v}.json")) as f:
-                c = _json.load(f)
-            dirs |= set(c["add"])
-            dirs -= set(c["remove"])
-        return sorted(dirs)
-
-    def canon(df: DataFrame):
-        cols = F.concat_ws(
-            "\x01", *[F.coalesce(F.col(c).cast("string"), F.lit("<NULL>"))
-                      for c in sorted(df.columns)])
-        h = (F.conv(F.substring(F.md5(cols), 1, 15), 16, 10)
-             .cast("decimal(38,0)"))
-        return df.agg(F.count("*").alias("n"), F.sum(h).alias("hsum"))
+    data, log = _txn_table("sink_txn_log_snapshot")
+    _txn_stage_rewrite_history(spark, ev, data, log)
 
     snaps = {}
-    for v in sorted(_TXN_COMMITS):
-        dirs = active(v)
-        snap = spark.read.schema(ev.schema).parquet(
-            *[os.path.join(data, d) for d in dirs])
-        r = canon(snap).collect()[0]
-        snaps[v] = (len(dirs), int(r["n"]), r["hsum"])
-    rewrite_ok = int(snaps[3][1] == snaps[2][1]
-                     and snaps[3][2] == snaps[2][2])
+    for v in (1, 2, 3):
+        dirs = txn_active_dirs(log, v)
+        snaps[v] = (len(dirs), _txn_canon(_txn_read(spark, data, dirs,
+                                                    ev.schema)))
+    rewrite_ok = int(snaps[3][1] == snaps[2][1])
     return spark.createDataFrame(
-        [(v, snaps[v][0], snaps[v][1], 1 if v < 3 else rewrite_ok)
+        [(v, snaps[v][0], snaps[v][1][0], 1 if v < 3 else rewrite_ok)
          for v in sorted(snaps)],
         "version int, n_active_commits long, n_rows long, "
         "rewrite_preserves_content int")
@@ -676,6 +679,35 @@ def sink_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 class TxnConflictError(RuntimeError):
     """A concurrent writer already committed this version — the caller's
     snapshot is stale; re-read the table and retry the transaction."""
+
+
+def _txn_publish(log_dir: str, name: str, obj: dict, publish) -> None:
+    """Durable atomic publish of one JSON object as ``log_dir/name``:
+    the content is written + fsynced to a temp file, then
+    ``publish(tmp, final)`` moves it into place — ``os.link`` for a
+    manifest (fails with FileExistsError if the slot is taken),
+    ``os.replace`` for a checkpoint object or the pointer. A crash
+    mid-write leaves only an unreferenced temp file, never a truncated
+    published object. The temp file is removed whatever happens."""
+    # temp name unique PER ATTEMPT, not per process (ADVICE r12): two
+    # threads of one driver publishing the same name must never share a
+    # temp path, or one can truncate the other's fsynced bytes before
+    # they are published. pid + thread ident + uuid4 makes collision
+    # impossible.
+    tmp = os.path.join(
+        log_dir, f".{name}.{os.getpid()}.{threading.get_ident()}."
+                 f"{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        publish(tmp, os.path.join(log_dir, name))
+    finally:
+        # suppress, not bare-unlink: os.replace consumed the temp file,
+        # and a racing cleanup must never mask the caller's error
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
 
 
 def txn_commit(log_dir: str, version: int, adds: list[str],
@@ -700,44 +732,41 @@ def txn_commit(log_dir: str, version: int, adds: list[str],
     ``extra`` merges additional manifest fields (commit timestamp,
     schema — the round-12 checkpoint / schema-evolution / AS-OF keys
     use it); ``version``/``add``/``remove`` stay reserved."""
-    import contextlib as _contextlib
-    import json as _json
-    import threading as _threading
-    import uuid as _uuid
-
-    path = os.path.join(log_dir, f"{version}.json")
-    # temp name unique PER ATTEMPT, not per process (ADVICE r12): two
-    # threads of one driver committing the same version must never share
-    # a temp path, or the loser can truncate the winner's fsynced bytes
-    # before os.link publishes them (a corrupt manifest would win the
-    # slot). pid + thread ident + uuid4 makes collision impossible.
-    tmp = os.path.join(
-        log_dir, f".{version}.{os.getpid()}.{_threading.get_ident()}."
-                 f"{_uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        _json.dump({"version": version, "add": sorted(adds),
-                    "remove": sorted(removes), **(extra or {})}, f)
-        f.flush()
-        os.fsync(f.fileno())
+    name = f"{version}.json"
     try:
-        os.link(tmp, path)
+        _txn_publish(log_dir, name,
+                     {"version": version, "add": sorted(adds),
+                      "remove": sorted(removes), **(extra or {})},
+                     os.link)
     except FileExistsError:
         raise TxnConflictError(
             f"transaction log already holds version {version} "
-            f"({path}): a concurrent writer committed first — rebase "
-            f"onto the new snapshot and retry") from None
-    finally:
-        # suppress, not bare-unlink: a racing cleanup of the same temp
-        # file must never mask the TxnConflictError above (ADVICE r12).
-        with _contextlib.suppress(FileNotFoundError):
-            os.unlink(tmp)
+            f"({os.path.join(log_dir, name)}): a concurrent writer "
+            f"committed first — rebase onto the new snapshot and "
+            f"retry") from None
 
 
 def _txn_manifest(log_dir: str, version: int) -> dict:
-    import json as _json
-
     with open(os.path.join(log_dir, f"{version}.json")) as f:
-        return _json.load(f)
+        return json.load(f)
+
+
+def _txn_last_checkpoint(log_dir: str) -> tuple[int, dict | None]:
+    """The ``_last_checkpoint`` pointer and the checkpoint object it
+    names: ``(cv, obj)``. ``(0, None)`` when there is no pointer;
+    ``(cv, None)`` when the named object is missing (cleaned up,
+    partially replicated) — each resolver then applies its own
+    damaged-accelerator rule."""
+    try:
+        with open(os.path.join(log_dir, "_last_checkpoint")) as f:
+            cv = int(json.load(f)["version"])
+    except FileNotFoundError:
+        return 0, None
+    try:
+        with open(os.path.join(log_dir, f"_checkpoint.{cv}.json")) as f:
+            return cv, json.load(f)
+    except FileNotFoundError:
+        return cv, None
 
 
 def txn_resolve(log_dir: str, version: int) -> tuple[list[str], int, int]:
@@ -756,22 +785,11 @@ def txn_resolve(log_dir: str, version: int) -> tuple[list[str], int, int]:
     contract holds even when the accelerator is damaged). Raises
     FileNotFoundError if a replayed manifest is missing (version never
     committed)."""
-    import json as _json
-
     seed: set[str] = set()
     start, ckpt_v = 1, 0
-    ptr = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            cv = int(_json.load(f)["version"])
-        if cv <= version:
-            try:
-                with open(os.path.join(log_dir,
-                                       f"_checkpoint.{cv}.json")) as f:
-                    seed = set(_json.load(f)["active"])
-                start, ckpt_v = cv + 1, cv
-            except FileNotFoundError:
-                seed, start, ckpt_v = set(), 1, 0
+    cv, ck = _txn_last_checkpoint(log_dir)
+    if ck is not None and cv <= version:
+        seed, start, ckpt_v = set(ck["active"]), cv + 1, cv
     dirs, reads = set(seed), 0
     for v in range(start, version + 1):
         c = _txn_manifest(log_dir, v)
@@ -791,19 +809,25 @@ def txn_active_dirs(log_dir: str, version: int) -> list[str]:
 
 def txn_checkpoint(log_dir: str, version: int, *,
                    crash_before_pointer_swap: bool = False) -> None:
-    """Materialize snapshot resolution at ``version`` into a manifest
-    CHECKPOINT (the Delta `_last_checkpoint` idea): without one, every
-    read replays the whole log — O(history); with one, reads cost
-    checkpoint + suffix.
+    """Materialize resolution at ``version`` into a manifest CHECKPOINT
+    (the Delta `_last_checkpoint` idea): without one, every read replays
+    the whole log — O(history); with one, reads cost checkpoint +
+    suffix. The object ``_checkpoint.{version}.json`` records the
+    active-dir set, the checkpointed commit's ``ts`` when its manifest
+    carries one (AS-OF resolution seeds from it) and the resolved table
+    schema when the history records one (schema resolution seeds from
+    it).
 
-    Two steps, each independently atomic, in the only safe order:
+    Two steps, each a durable atomic publish (:func:`_txn_publish` —
+    fsynced temp file named per attempt, then ``os.replace``), in the
+    only safe order:
 
-    1. temp-write + fsync + ``os.replace`` the COMPLETE checkpoint
-       object to ``_checkpoint.{version}.json`` (content is a pure
+    1. publish the COMPLETE checkpoint object (its content is a pure
        function of the log prefix, so concurrent checkpointers of the
-       same version converge byte-identically);
-    2. temp-write + fsync + ``os.replace`` the ``_last_checkpoint``
-       pointer — monotonic: an already-newer pointer is left alone.
+       same version — threads of one driver included — converge on
+       byte-identical content);
+    2. publish the ``_last_checkpoint`` pointer — monotonic: an
+       already-equal-or-newer pointer is left alone.
 
     A crash BETWEEN the steps is safe by construction: the pointer
     still names the previous checkpoint (or none), resolution falls
@@ -811,48 +835,25 @@ def txn_checkpoint(log_dir: str, version: int, *,
     and re-running the checkpoint converges. The ``crash_before_pointer_
     swap`` hook stops after step 1 so tests (and the op's audit row) can
     prove exactly that window."""
-    import json as _json
-
     dirs, _, _ = txn_resolve(log_dir, version)
-    ckpt = os.path.join(log_dir, f"_checkpoint.{version}.json")
-    tmp = ckpt + f".{os.getpid()}.tmp"
-    # the checkpoint also records the checkpointed version's commit
-    # timestamp when the manifest carries one (round 13, VERDICT r12
-    # wrong #1): AS-OF resolution seeds its probe from it and walks only
-    # the suffix — the metadata plane's O(history) disease, cured the
-    # same way snapshot resolution was. Commit timestamps are monotone
-    # by protocol (version slots serialize writers; each stamps at
-    # commit time), so ts(checkpoint) <= requested implies the answer
-    # is at or after the checkpoint.
     obj = {"version": version, "active": dirs}
+    # commit timestamps are monotone by protocol (version slots
+    # serialize writers; each stamps at commit time), so ts(checkpoint)
+    # <= requested implies the AS-OF answer is at or after the checkpoint
     mf = _txn_manifest(log_dir, version)
     if "ts" in mf:
         obj["ts"] = mf["ts"]
-    # ... and the resolved table schema when the history records one
-    # (round 13): schema resolution then reads checkpoint + suffix
-    # instead of walking back to the last schema commit.
     try:
         obj["schema"], _, _ = txn_schema_resolve(log_dir, version)
     except ValueError:
         pass  # schema-less history (most demos): nothing to record
-    with open(tmp, "w") as f:
-        _json.dump(obj, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, ckpt)
+    _txn_publish(log_dir, f"_checkpoint.{version}.json", obj, os.replace)
     if crash_before_pointer_swap:
         return
-    ptr = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            if int(_json.load(f)["version"]) >= version:
-                return
-    tmp2 = ptr + f".{os.getpid()}.tmp"
-    with open(tmp2, "w") as f:
-        _json.dump({"version": version}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp2, ptr)
+    if _txn_last_checkpoint(log_dir)[0] >= version:
+        return
+    _txn_publish(log_dir, "_last_checkpoint", {"version": version},
+                 os.replace)
 
 
 def txn_version_at_resolve(log_dir: str,
@@ -882,21 +883,11 @@ def txn_version_at_resolve(log_dir: str,
     Raises ValueError if the timestamp precedes the first commit, or if
     a probed manifest carries no timestamp (AS-OF needs ts-stamped
     commits — fail loudly, never guess)."""
-    import json as _json
-
     best, v, ckpt_v = None, 1, 0
-    ptr = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            cv = int(_json.load(f)["version"])
-        try:
-            with open(os.path.join(log_dir,
-                                   f"_checkpoint.{cv}.json")) as f:
-                ck = _json.load(f)
-            if "ts" in ck and ck["ts"] <= ts:
-                best, v, ckpt_v = cv, cv + 1, cv
-        except FileNotFoundError:
-            pass  # damaged accelerator -> full probe (txn_resolve's rule)
+    cv, ck = _txn_last_checkpoint(log_dir)
+    # a damaged accelerator (ck None) -> full probe (txn_resolve's rule)
+    if ck is not None and "ts" in ck and ck["ts"] <= ts:
+        best, v, ckpt_v = cv, cv + 1, cv
     reads = 0
     while True:
         try:
@@ -945,27 +936,15 @@ def txn_schema_resolve(log_dir: str,
     schema commit), worst-case O(history) when only v1 recorded one.
     Raises ValueError if no schema is recorded anywhere at-or-before
     ``version``."""
-    import json as _json
-
-    ptr = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            cv = int(_json.load(f)["version"])
-        if cv <= version:
-            try:
-                with open(os.path.join(log_dir,
-                                       f"_checkpoint.{cv}.json")) as f:
-                    ck = _json.load(f)
-            except FileNotFoundError:
-                ck = {}
-            if "schema" in ck:
-                best, reads = ck["schema"], 0
-                for v in range(cv + 1, version + 1):
-                    c = _txn_manifest(log_dir, v)
-                    reads += 1
-                    if "schema" in c:
-                        best = c["schema"]
-                return best, reads, cv
+    cv, ck = _txn_last_checkpoint(log_dir)
+    if ck is not None and cv <= version and "schema" in ck:
+        best, reads = ck["schema"], 0
+        for v in range(cv + 1, version + 1):
+            c = _txn_manifest(log_dir, v)
+            reads += 1
+            if "schema" in c:
+                best = c["schema"]
+        return best, reads, cv
     reads = 0
     for v in range(version, 0, -1):
         c = _txn_manifest(log_dir, v)
@@ -983,15 +962,8 @@ def txn_head_version(log_dir: str) -> int:
     :func:`txn_resolve`. The probe is read-only; writers race for
     head+1 via :func:`txn_commit` and rely on ITS atomicity, never on
     this probe being current."""
-    import json as _json
-
-    v = 0
-    ptr = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            cv = int(_json.load(f)["version"])
-        if os.path.exists(os.path.join(log_dir, f"{cv}.json")):
-            v = cv
+    cv, _ = _txn_last_checkpoint(log_dir)
+    v = cv if os.path.exists(os.path.join(log_dir, f"{cv}.json")) else 0
     while os.path.exists(os.path.join(log_dir, f"{v + 1}.json")):
         v += 1
     return v
@@ -1070,16 +1042,23 @@ def txn_rebase_check(log_dir: str, version: int,
             f"new snapshot")
 
 
-def _txn_canon(df: DataFrame):
-    """Order-invariant exact content identity (1-row frame): per-row md5
-    over every column, NULL-sentinel encoded (`compact_parquet_tree`'s
-    discipline), 15 hex chars -> exact decimal sum."""
-    cols = F.concat_ws(
-        "\x01", *[F.coalesce(F.col(c).cast("string"), F.lit("<NULL>"))
-                  for c in sorted(df.columns)])
-    h = (F.conv(F.substring(F.md5(cols), 1, 15), 16, 10)
-         .cast("decimal(38,0)"))
-    return df.agg(F.count("*").alias("n"), F.sum(h).alias("hsum"))
+def _txn_merge(spark: SparkSession, ev: DataFrame, data: str, log: str,
+               version: int, mod: int, bump: float, name: str) -> None:
+    """MERGE the event_id % ``mod`` == 0 change feed into
+    snapshot(version - 1) as commit ``version``: even ids DELETE, odd
+    ids UPSERT value + ``bump`` (`cdc_apply_changes`' row semantics).
+    Copy-on-write at commit granularity: untouched rows = snapshot
+    ANTI-JOIN change keys, merged = untouched ∪ upsert rows, written as
+    ONE new immutable dir ``name``; the commit adds it and retires every
+    dir of the base snapshot."""
+    src = ev.filter(F.col("event_id") % mod == 0)
+    upserts = src.filter(F.col("event_id") % 2 == 1) \
+                 .withColumn("value", F.col("value") + F.lit(bump))
+    base_dirs = txn_active_dirs(log, version - 1)
+    snap = _txn_read(spark, data, base_dirs, ev.schema)
+    merged = (snap.join(src.select("event_id"), "event_id", "left_anti")
+                  .unionByName(upserts.select(*snap.columns)))
+    _txn_append(merged, data, log, version, name, base_dirs)
 
 
 @op("sink_txn_merge", oracle="""
@@ -1131,33 +1110,14 @@ def sink_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir-partitioned and only AFFECTED dirs rewrite, which changes the
     dir arithmetic, not the log protocol. Manifests stay driver-side
     JSON. Idempotent: the whole staging tree is wiped and rebuilt."""
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_merge")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
+    data, log = _txn_table("sink_txn_merge")
 
     base_df = ev.filter(F.col("event_id") % 3 == 0)
-    base_df.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v1"))
-    txn_commit(log, 1, ["v1"], [])
-
+    _txn_append(base_df, data, log, 1, "v1")
     # change feed: even ids delete, odd ids upsert value+1000
-    src = ev.filter(F.col("event_id") % 5 == 0)
-    upserts = src.filter(F.col("event_id") % 2 == 1) \
-                 .withColumn("value", F.col("value") + F.lit(1000.0))
-    snap1 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, 1)])
-    untouched = snap1.join(src.select("event_id"), "event_id",
-                           "left_anti")
-    merged = untouched.unionByName(upserts.select(*snap1.columns))
-    merged.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v2_merge"))
-    txn_commit(log, 2, ["v2_merge"], ["v1"])
+    _txn_merge(spark, ev, data, log, 2, 5, 1000.0, "v2_merge")
 
     # stage counts: one map-combinable conditional aggregate
     eid = F.col("event_id")
@@ -1175,23 +1135,18 @@ def sink_txn_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         cnt(is_base & is_del).alias("n_deleted")).collect()[0]
 
     # proofs: merged snapshot vs independent expectation; v1 intact
-    snap2 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, 2)])
     expected = (ev.filter(is_base & ~is_src)
                   .unionByName(ev.filter(is_ups).withColumn(
                       "value", F.col("value") + F.lit(1000.0))))
-    got2, want2 = _txn_canon(snap2).collect()[0], \
-        _txn_canon(expected).collect()[0]
-    snap1_back = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, 1)])
-    got1, want1 = _txn_canon(snap1_back).collect()[0], \
-        _txn_canon(base_df).collect()[0]
+    got2 = _txn_canon(_txn_read(spark, data, txn_active_dirs(log, 2),
+                                ev.schema))
+    got1 = _txn_canon(_txn_read(spark, data, txn_active_dirs(log, 1),
+                                ev.schema))
     return spark.createDataFrame(
         [(1, 2, counts["n_base"], counts["n_source"],
           counts["n_updated"], counts["n_inserted"], counts["n_deleted"],
-          int(got2["n"]),
-          int(tuple(got2) == tuple(want2)),
-          int(tuple(got1) == tuple(want1)))],
+          got2[0], int(got2 == _txn_canon(expected)),
+          int(got1 == _txn_canon(base_df)))],
         "version_base int, version_merge int, n_base long, "
         "n_source long, n_updated long, n_inserted long, n_deleted long, "
         "n_final long, merge_preserves_content int, "
@@ -1233,26 +1188,10 @@ def sink_txn_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combinable aggregate. Idempotent: the staging tree is wiped
     and rebuilt, and re-vacuuming an already-vacuumed table removes
     nothing."""
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_vacuum")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
-
-    ev.filter(F.col("event_id") % 3 == 0).repartition(1) \
-      .write.mode("overwrite").parquet(os.path.join(data, "v1"))
-    txn_commit(log, 1, ["v1"], [])
-    ev.filter(F.col("event_id") % 3 == 1).repartition(1) \
-      .write.mode("overwrite").parquet(os.path.join(data, "v2"))
-    txn_commit(log, 2, ["v2"], [])
-    v1_back = spark.read.schema(ev.schema).parquet(os.path.join(data, "v1"))
-    v1_back.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v3"))
-    txn_commit(log, 3, ["v3"], ["v1"])
+    data, log = _txn_table("sink_txn_vacuum")
+    _txn_stage_rewrite_history(spark, ev, data, log)
 
     latest = 3
     n_before = len(os.listdir(data))
@@ -1261,24 +1200,20 @@ def sink_txn_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         referenced |= set(txn_active_dirs(log, v))
     vacuumed = sorted(set(os.listdir(data)) - referenced)
     for d in vacuumed:
-        _shutil.rmtree(os.path.join(data, d))
+        shutil.rmtree(os.path.join(data, d))
     n_after = len(os.listdir(data))
 
-    snap3 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, latest)])
-    expected = ev.filter(F.col("event_id") % 3 < 2)
-    got, want = _txn_canon(snap3).collect()[0], \
-        _txn_canon(expected).collect()[0]
+    got = _txn_canon(_txn_read(spark, data, txn_active_dirs(log, latest),
+                               ev.schema))
+    want = _txn_canon(ev.filter(F.col("event_id") % 3 < 2))
     try:
-        spark.read.schema(ev.schema).parquet(
-            *[os.path.join(data, d)
-              for d in txn_active_dirs(log, 1)]).count()
+        _txn_read(spark, data, txn_active_dirs(log, 1), ev.schema).count()
         pre_unreadable = 0
     except Exception:
         pre_unreadable = 1
     return spark.createDataFrame(
-        [(n_before, n_after, len(vacuumed), int(got["n"]),
-          int(tuple(got) == tuple(want)), pre_unreadable)],
+        [(n_before, n_after, len(vacuumed), got[0], int(got == want),
+          pre_unreadable)],
         "n_dirs_before long, n_dirs_after long, n_vacuumed long, "
         "n_rows_latest long, latest_content_intact int, "
         "pre_horizon_unreadable int")
@@ -1336,28 +1271,19 @@ def sink_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifests resolution READS, never which dirs it returns. Idempotent:
     the staging tree is wiped and rebuilt; re-checkpointing the same
     version rewrites identical bytes."""
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_checkpoint")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
+    data, log = _txn_table("sink_txn_checkpoint")
 
     k = _TXN_CKPT_COMMITS
     for v in range(1, k + 1):
-        ev.filter(F.col("event_id") % k == v - 1).repartition(1) \
-          .write.mode("overwrite").parquet(os.path.join(data, f"v{v}"))
-        txn_commit(log, v, [f"v{v}"], [])
+        _txn_append(ev.filter(F.col("event_id") % k == v - 1), data, log,
+                    v, f"v{v}")
 
     def snap_canon(version: int):
         dirs, reads, ckpt_v = txn_resolve(log, version)
-        df = spark.read.schema(ev.schema).parquet(
-            *[os.path.join(data, d) for d in dirs])
-        r = _txn_canon(df).collect()[0]
-        return (int(r["n"]), r["hsum"]), reads, ckpt_v
+        return (_txn_canon(_txn_read(spark, data, dirs, ev.schema)),
+                reads, ckpt_v)
 
     full_canon, full_reads, _ = snap_canon(k)          # no checkpoint yet
     txn_checkpoint(log, _TXN_CKPT_AT)
@@ -1431,20 +1357,13 @@ def sink_txn_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dir choice, not the protocol. Idempotent: staging wiped per
     run; a re-run after a crash mid-compaction rewrites the same
     bytes and re-attempts the same commit."""
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_optimize")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
+    data, log = _txn_table("sink_txn_optimize")
 
     for v in range(1, 5):
-        ev.filter(F.col("event_id") % 5 == v - 1).repartition(1) \
-          .write.mode("overwrite").parquet(os.path.join(data, f"v{v}"))
-        txn_commit(log, v, [f"v{v}"], [])
+        _txn_append(ev.filter(F.col("event_id") % 5 == v - 1), data, log,
+                    v, f"v{v}")
 
     # OPTIMIZE prepares against base version 4
     base_version = 4
@@ -1454,9 +1373,7 @@ def sink_txn_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(data, "opt"), ev.schema, target_files=1)
 
     # ... meanwhile a concurrent writer commits version 5
-    ev.filter(F.col("event_id") % 5 == 4).repartition(1) \
-      .write.mode("overwrite").parquet(os.path.join(data, "v5"))
-    txn_commit(log, 5, ["v5"], [])
+    _txn_append(ev.filter(F.col("event_id") % 5 == 4), data, log, 5, "v5")
 
     # OPTIMIZE tries to commit version 5 -> loses loudly, rebases to 6
     conflict = 0
@@ -1473,20 +1390,14 @@ def sink_txn_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_before = len(txn_active_dirs(log, 5))
     after_dirs = txn_active_dirs(log, opt_version)
-    snap = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in after_dirs])
-    got, want = _txn_canon(snap).collect()[0], \
-        _txn_canon(ev).collect()[0]
-    content_ok = int(tuple(got) == tuple(want)
-                     and audit["value_match"] == 1)
-    snap4 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, 4)])
-    got4, want4 = _txn_canon(snap4).collect()[0], \
-        _txn_canon(ev.filter(F.col("event_id") % 5 < 4)).collect()[0]
+    got = _txn_canon(_txn_read(spark, data, after_dirs, ev.schema))
+    content_ok = int(got == _txn_canon(ev) and audit["value_match"] == 1)
+    got4 = _txn_canon(_txn_read(spark, data, txn_active_dirs(log, 4),
+                                ev.schema))
+    want4 = _txn_canon(ev.filter(F.col("event_id") % 5 < 4))
     return spark.createDataFrame(
         [(base_version, conflict, opt_version, n_before,
-          len(after_dirs), int(got["n"]), content_ok,
-          int(tuple(got4) == tuple(want4)))],
+          len(after_dirs), got[0], content_ok, int(got4 == want4))],
         "version_base int, conflict_detected int, version_optimize int, "
         "n_dirs_before long, n_dirs_after long, n_rows_latest long, "
         "optimize_preserves_content int, "
@@ -1543,31 +1454,20 @@ def sink_txn_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the missing column as null per file, no rewrite of old dirs — the
     whole point of add-column evolution). Idempotent: staging wiped
     per run."""
-    import shutil as _shutil
-
     from pyspark.sql.types import StructType
 
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_schema_evolve")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
+    data, log = _txn_table("sink_txn_schema_evolve")
 
     base_df = ev.filter(F.col("event_id") % 2 == 0)
-    base_df.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v1"))
-    txn_commit(log, 1, ["v1"], [],
-               extra={"schema": base_df.schema.jsonValue()})
-
+    _txn_append(base_df, data, log, 1, "v1",
+                extra={"schema": base_df.schema.jsonValue()})
     evolved_df = (ev.filter(F.col("event_id") % 2 == 1)
                     .withColumn("value_eur",
                                 F.round(F.col("value") * 0.9, 6)))
-    evolved_df.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v2"))
-    txn_commit(log, 2, ["v2"], [],
-               extra={"schema": evolved_df.schema.jsonValue()})
+    _txn_append(evolved_df, data, log, 2, "v2",
+                extra={"schema": evolved_df.schema.jsonValue()})
 
     # three schema-less metadata commits (commitInfo-style: empty
     # add/remove — content unchanged) distance the head from the last
@@ -1575,14 +1475,10 @@ def sink_txn_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (3, 4, 5):
         txn_commit(log, v, [], [])
 
-    def schema_at(version: int) -> StructType:
-        return StructType.fromJson(
-            txn_schema_resolve(log, version)[0])
-
     def snap(version: int) -> DataFrame:
-        return spark.read.schema(schema_at(version)).parquet(
-            *[os.path.join(data, d)
-              for d in txn_active_dirs(log, version)])
+        return _txn_read(spark, data, txn_active_dirs(log, version),
+                         StructType.fromJson(
+                             txn_schema_resolve(log, version)[0]))
 
     s2 = snap(2)
     n_v2 = s2.count()
@@ -1590,12 +1486,9 @@ def sink_txn_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected2 = (base_df.withColumn(
                      "value_eur", F.lit(None).cast("double"))
                  .unionByName(evolved_df))
-    got2, want2 = _txn_canon(s2).collect()[0], \
-        _txn_canon(expected2).collect()[0]
     s1 = snap(1)
-    got1, want1 = _txn_canon(s1).collect()[0], \
-        _txn_canon(base_df).collect()[0]
-    pre_ok = int(tuple(got1) == tuple(want1)
+    got1 = _txn_canon(s1)
+    pre_ok = int(got1 == _txn_canon(base_df)
                  and len(s1.columns) == len(base_df.columns))
 
     # read-cost contract (round 13): resolving the schema at the head
@@ -1607,8 +1500,8 @@ def sink_txn_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sch_ck, reads_ck, seed = txn_schema_resolve(log, 5)
     ck_same = int(sch_ck == sch_full and seed == 5)
     return spark.createDataFrame(
-        [(1, 2, int(got1["n"]), n_v2, len(s1.columns), len(s2.columns),
-          n_nulls, int(tuple(got2) == tuple(want2)), pre_ok,
+        [(1, 2, got1[0], n_v2, len(s1.columns), len(s2.columns),
+          n_nulls, int(_txn_canon(s2) == _txn_canon(expected2)), pre_ok,
           reads_full, reads_ck, ck_same)],
         "version_base int, version_evolve int, n_rows_v1 long, "
         "n_rows_v2 long, n_cols_v1 int, n_cols_v2 int, "
@@ -1669,42 +1562,21 @@ def sink_txn_timetravel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-scale manifests, now O(suffix past the checkpoint) like
     snapshot resolution; the data read is the ordinary snapshot
     multi-dir scan. Idempotent: staging wiped per run."""
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_timetravel_ts")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
-
-    slices = {1: ev.filter(F.col("event_id") % 3 == 0),
-              2: ev.filter(F.col("event_id") % 3 == 1)}
-    slices[1].repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v1"))
-    txn_commit(log, 1, ["v1"], [], extra={"ts": _TXN_TS_BASE + 100})
-    slices[2].repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v2"))
-    txn_commit(log, 2, ["v2"], [], extra={"ts": _TXN_TS_BASE + 200})
-    v1_back = spark.read.schema(ev.schema).parquet(
-        os.path.join(data, "v1"))
-    v1_back.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v3"))
-    txn_commit(log, 3, ["v3"], ["v1"], extra={"ts": _TXN_TS_BASE + 300})
+    data, log = _txn_table("sink_txn_timetravel_ts")
+    _txn_stage_rewrite_history(spark, ev, data, log, ts_base=_TXN_TS_BASE)
 
     def snap_at(ts: int):
         v, reads, seed = txn_version_at_resolve(log, ts)
-        return v, reads, seed, spark.read.schema(ev.schema).parquet(
-            *[os.path.join(data, d) for d in txn_active_dirs(log, v)])
+        return v, reads, seed, _txn_canon(_txn_read(
+            spark, data, txn_active_dirs(log, v), ev.schema))
 
     # un-checkpointed: the mid-window lookup walks v1, v2 and stops AT
     # v3 (first commit stamped after the request) — 3 manifest reads
-    mid_v, full_reads, _, mid = snap_at(_TXN_TS_BASE + 250)
-    boundary_v, _, _, _ = snap_at(_TXN_TS_BASE + 300)
-    expected_mid = ev.filter(F.col("event_id") % 3 < 2)
-    got, want = _txn_canon(mid).collect()[0], \
-        _txn_canon(expected_mid).collect()[0]
+    mid_v, full_reads, _, got = snap_at(_TXN_TS_BASE + 250)
+    boundary_v = txn_version_at(log, _TXN_TS_BASE + 300)
+    want = _txn_canon(ev.filter(F.col("event_id") % 3 < 2))
     try:
         txn_version_at(log, _TXN_TS_BASE + 99)
         before_raises = 0
@@ -1713,12 +1585,10 @@ def sink_txn_timetravel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint at v2: the same lookup seeds at the checkpoint (its
     # recorded commit ts <= the request) and reads ONLY the v3 suffix
     txn_checkpoint(log, 2)
-    ck_v, ck_reads, ck_seed, ck_mid = snap_at(_TXN_TS_BASE + 250)
-    ck_got = _txn_canon(ck_mid).collect()[0]
-    ck_same = int(ck_v == mid_v and tuple(ck_got) == tuple(got))
+    ck_v, ck_reads, ck_seed, ck_got = snap_at(_TXN_TS_BASE + 250)
+    ck_same = int(ck_v == mid_v and ck_got == got)
     return spark.createDataFrame(
-        [(mid_v, boundary_v, int(got["n"]),
-          int(tuple(got) == tuple(want)), before_raises,
+        [(mid_v, boundary_v, got[0], int(got == want), before_raises,
           full_reads, ck_reads, ck_seed, ck_same)],
         "asof_mid_version int, asof_boundary_version int, "
         "n_rows_asof_mid long, asof_content_ok int, "
@@ -1727,35 +1597,78 @@ def sink_txn_timetravel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ckpt_same_answer int")
 
 
-def txn_prune_dirs(log_dir: str, version: int,
-                   lo_us: int, hi_us: int) -> tuple[list[str], list[str]]:
-    """STATS-BASED DATA SKIPPING on the transaction log (round 12): each
-    manifest may record per-dir column stats (here: the written data's
-    ts min/max, epoch-µs — computed FROM the data before commit, never
-    trusted from the writer's intent); a predicate read resolves the
-    snapshot and keeps only dirs whose [min, max] overlaps
-    [lo_us, hi_us). A dir with NO recorded stats is always kept — the
-    safe default (skipping is an optimization; absence of evidence must
-    never drop data). Returns (active_dirs, scanned_dirs).
+def txn_prune_dirs(log_dir: str, version: int, *,
+                   part_eq: dict | None = None,
+                   col_preds: dict | None = None
+                   ) -> tuple[list[str], list[str], list[str]]:
+    """METADATA PRUNING for snapshot reads (data skipping): resolve
+    snapshot(``version``) and keep only the dirs a predicate can touch,
+    cheapest evidence first — the order every real lakehouse applies:
 
-    Stats fold MIRRORS the add/remove fold (ADVICE r12): a manifest
-    that removes a dir also drops its recorded stats, so a dir NAME
-    reused after remove+re-add (a recurring OPTIMIZE output dir) never
-    inherits the retired incarnation's ranges — stale stats applied to
-    new data could wrongly prune a live dir, violating the safety rule
-    above."""
+    1. **Partition equality** (``part_eq``: {col: value}): manifests may
+       record per-dir partition VALUES (``parts`` field); a dir whose
+       recorded value mismatches any predicate column is dropped
+       without touching stats.
+    2. **Column-stats intervals** (``col_preds``: {col: (lo, hi)},
+       half-open): manifests may record per-dir min/max per column
+       (``colstats`` field, ``{dir: {col: {"min", "max"}}}`` — computed
+       FROM the written data before commit, never trusted from the
+       writer's intent); a surviving dir is scanned only if every
+       predicated column's [min, max] overlaps [lo, hi).
+
+    Absent metadata always means KEEP: a dir with no recorded partition
+    value or stats for a predicate column is scanned (skipping is an
+    optimization; absence of evidence must never drop data). Both folds
+    MIRROR the add/remove fold (ADVICE r12): a manifest that removes a
+    dir drops its partition values and stats, so a dir NAME reused
+    after remove+re-add (a recurring OPTIMIZE output dir) never inherits
+    the retired incarnation's metadata — stale ranges applied to new
+    data could wrongly prune a live dir. Returns ``(active,
+    after_partition_prune, scanned)``."""
     active = txn_active_dirs(log_dir, version)
-    stats: dict[str, dict] = {}
+    parts: dict[str, dict] = {}
+    colstats: dict[str, dict] = {}
     for v in range(1, version + 1):
         c = _txn_manifest(log_dir, v)
         for d in c.get("remove", []):
-            stats.pop(d, None)
-        stats.update(c.get("stats", {}))
-    scanned = [d for d in active
-               if d not in stats
-               or (stats[d]["ts_min"] < hi_us
-                   and stats[d]["ts_max"] >= lo_us)]
-    return active, scanned
+            parts.pop(d, None)
+            colstats.pop(d, None)
+        parts.update(c.get("parts", {}))
+        colstats.update(c.get("colstats", {}))
+
+    def part_keep(d: str) -> bool:
+        rec = parts.get(d)
+        if rec is None or not part_eq:
+            return True
+        return all(col not in rec or rec[col] == val
+                   for col, val in part_eq.items())
+
+    def stats_keep(d: str) -> bool:
+        st = colstats.get(d)
+        if st is None or not col_preds:
+            return True
+        for col, (lo, hi) in col_preds.items():
+            cs = st.get(col)
+            if cs is not None and not (cs["min"] < hi
+                                       and cs["max"] >= lo):
+                return False
+        return True
+
+    after_parts = [d for d in active if part_keep(d)]
+    scanned = [d for d in after_parts if stats_keep(d)]
+    return active, after_parts, scanned
+
+
+def _txn_ts_colstats(df: DataFrame, name: str) -> dict:
+    """The ``colstats`` manifest entry of commit dir ``name``: the
+    slice's ts min/max in epoch-µs, aggregated from the data itself.
+    An empty slice records nothing — a stats-less dir is always
+    scanned."""
+    st = df.agg(F.min(F.unix_micros("ts")).alias("lo"),
+                F.max(F.unix_micros("ts")).alias("hi")).collect()[0]
+    if st["lo"] is None:
+        return {}
+    return {name: {"ts": {"min": int(st["lo"]), "max": int(st["hi"])}}}
 
 
 #: the stats-prune demo's predicate window (inside week 2 of the
@@ -1778,8 +1691,11 @@ def sink_txn_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-skipping half of the lakehouse design (Delta file stats /
     Iceberg manifests' value ranges), composed with the r10-r12 log:
     each of 4 weekly commits records the WRITTEN data's ts min/max in
-    its manifest (aggregated from the slice itself before commit), and
-    a [Jan 10, Jan 12) predicate read prunes the snapshot to exactly
+    its manifest's ``colstats`` field (``{dir: {"ts": {"min", "max"}}}``,
+    aggregated from the slice itself before commit — the same field the
+    ZORDER and partition-prune commits record), and a
+    [Jan 10, Jan 12) predicate read through :func:`txn_prune_dirs`
+    (``col_preds={"ts": [lo, hi)}``) prunes the snapshot to exactly
     the week-2 dir BEFORE any parquet footer is touched — metadata
     pruning above the format, which is what makes a 100 TB time-range
     query open 1/52nd of the table. The audit row pins the dir
@@ -1795,15 +1711,9 @@ def sink_txn_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic at resolution time; the data read is the ordinary
     multi-dir scan over the SURVIVING dirs, with the residual filter
     pushed to parquet as usual. Idempotent: staging wiped per run."""
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_stats_prune")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
+    data, log = _txn_table("sink_txn_stats_prune")
 
     day0 = F.lit("2024-01-01").cast("timestamp")
     week = F.floor(
@@ -1812,41 +1722,29 @@ def sink_txn_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = ev.withColumn("_wk", F.least(week, F.lit(3)))
     for v in range(1, 5):
         sl = tagged.filter(F.col("_wk") == v - 1).drop("_wk")
-        sl.repartition(1).write.mode("overwrite") \
-          .parquet(os.path.join(data, f"w{v}"))
-        st = sl.agg(F.min(F.unix_micros("ts")).alias("lo"),
-                    F.max(F.unix_micros("ts")).alias("hi")).collect()[0]
-        extra = {}
-        if st["lo"] is not None:
-            extra = {"stats": {f"w{v}": {"ts_min": int(st["lo"]),
-                                         "ts_max": int(st["hi"])}}}
-        txn_commit(log, v, [f"w{v}"], [], extra=extra)
+        _txn_append(sl, data, log, v, f"w{v}",
+                    extra={"colstats": _txn_ts_colstats(sl, f"w{v}")})
 
-    active, scanned = txn_prune_dirs(log, 4, _PRUNE_LO, _PRUNE_HI)
+    window = {"ts": (_PRUNE_LO, _PRUNE_HI)}
+    active, _, scanned = txn_prune_dirs(log, 4, col_preds=window)
     pred = (F.col("ts") >= F.timestamp_micros(F.lit(_PRUNE_LO))) & \
            (F.col("ts") < F.timestamp_micros(F.lit(_PRUNE_HI)))
-    pruned = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in scanned]).filter(pred) \
-        if scanned else spark.createDataFrame([], ev.schema)
-    full = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in active]).filter(pred)
-    got, want = _txn_canon(pruned).collect()[0], \
-        _txn_canon(full).collect()[0]
+    got = _txn_canon(_txn_read(spark, data, scanned, ev.schema)
+                     .filter(pred))
+    want = _txn_canon(_txn_read(spark, data, active, ev.schema)
+                      .filter(pred))
 
     # safety rule: a 5th commit WITHOUT stats must always be scanned,
     # even though its data (a copy of week 4) lies outside the window
-    w4_back = spark.read.schema(ev.schema).parquet(
-        os.path.join(data, "w4"))
-    w4_back.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "nostats"))
-    txn_commit(log, 5, ["nostats"], [])
-    _, scanned5 = txn_prune_dirs(log, 5, _PRUNE_LO, _PRUNE_HI)
+    _txn_append(_txn_read(spark, data, ["w4"], ev.schema), data, log, 5,
+                "nostats")
+    _, _, scanned5 = txn_prune_dirs(log, 5, col_preds=window)
     statless_kept = int("nostats" in scanned5
                         and set(scanned) <= set(scanned5))
 
     return spark.createDataFrame(
-        [(len(active), len(scanned), int(got["n"]),
-          int(tuple(got) == tuple(want)), statless_kept)],
+        [(len(active), len(scanned), got[0], int(got == want),
+          statless_kept)],
         "n_dirs_active long, n_dirs_scanned long, n_rows_pred long, "
         "prune_matches_full int, statless_dir_never_pruned int")
 
@@ -1901,19 +1799,13 @@ def txn_changes(spark: SparkSession, data_root: str, log_dir: str,
     f_changed = sorted(from_dirs - to_dirs)
     t_changed = sorted(to_dirs - from_dirs)
 
-    def read_dirs(dirs: list[str]) -> DataFrame:
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(
-            *[os.path.join(data_root, d) for d in dirs])
-
     nonkey = [c for c in [f.name for f in schema.fields]
               if c != key_col]
-    f = read_dirs(f_changed).select(
+    f = _txn_read(spark, data_root, f_changed, schema).select(
         F.col(key_col),
         F.struct(*[F.col(c) for c in nonkey]).alias("row_f"),
         F.col("value").alias("value_before"))
-    t = read_dirs(t_changed).select(
+    t = _txn_read(spark, data_root, t_changed, schema).select(
         F.col(key_col),
         F.struct(*[F.col(c) for c in nonkey]).alias("row_t"),
         F.col("value").alias("value_after"))
@@ -1960,7 +1852,7 @@ def sink_txn_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is exactly the merge's semantic changes; a dir-diffing
     implementation would report the whole table as churn. The
     strictly-zero feed across the pure rewrite alone
-    (``txn_changes(2, 3)``) is pinned in tests/test_wave_r13b.py.
+    (``txn_changes(2, 3)``) is pinned in tests/test_txn_log.py.
 
     The DuckDB oracle states the change-row set directly from the
     source predicates — every insert/update/delete row with its
@@ -1971,68 +1863,8 @@ def sink_txn_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side. Idempotent: staging wiped per run."""
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    data, log = _txn_stage_merge_history(
-        spark, ev, _scratch("sink_txn_changes"))
+    data, log = _txn_stage_merge_history(spark, ev, "sink_txn_changes")
     return txn_changes(spark, data, log, ev.schema, "event_id", 1, 3)
-
-
-def txn_prune_dirs_full(log_dir: str, version: int, *,
-                        part_eq: dict | None = None,
-                        col_preds: dict | None = None
-                        ) -> tuple[list[str], list[str], list[str]]:
-    """GENERALIZED metadata pruning for snapshot reads (round 13,
-    VERDICT r12 missing #3/#4), applied in the order every real
-    lakehouse applies it — cheapest evidence first:
-
-    1. **Partition equality** (``part_eq``: {col: value}): manifests may
-       record per-dir partition VALUES (``parts`` field); a dir whose
-       recorded value mismatches any predicate column is dropped
-       without touching stats. Dirs with NO recorded partition value
-       for a predicate column are always kept (the stats-prune safety
-       rule, applied to partitions).
-    2. **Column-stats intervals** (``col_preds``: {col: [lo, hi)}):
-       per-dir min/max recorded in the ``colstats`` manifest field
-       (multi-column — the ZORDER commit records both clustering
-       dimensions); a surviving dir is scanned only if every
-       predicated column's [min, max] overlaps its interval, with
-       absent stats again meaning "keep".
-
-    Both folds MIRROR add/remove (the r13 `txn_prune_dirs` rule): a
-    manifest that removes a dir drops its partition values and stats,
-    so re-used dir names never inherit a retired incarnation's
-    metadata. Returns ``(active, after_partition_prune, scanned)``."""
-    active = txn_active_dirs(log_dir, version)
-    parts: dict[str, dict] = {}
-    colstats: dict[str, dict] = {}
-    for v in range(1, version + 1):
-        c = _txn_manifest(log_dir, v)
-        for d in c.get("remove", []):
-            parts.pop(d, None)
-            colstats.pop(d, None)
-        parts.update(c.get("parts", {}))
-        colstats.update(c.get("colstats", {}))
-
-    def part_keep(d: str) -> bool:
-        rec = parts.get(d)
-        if rec is None or not part_eq:
-            return True
-        return all(col not in rec or rec[col] == val
-                   for col, val in part_eq.items())
-
-    def stats_keep(d: str) -> bool:
-        st = colstats.get(d)
-        if st is None or not col_preds:
-            return True
-        for col, (lo, hi) in col_preds.items():
-            cs = st.get(col)
-            if cs is not None and not (cs["min"] < hi
-                                       and cs["max"] >= lo):
-                return False
-        return True
-
-    after_parts = [d for d in active if part_keep(d)]
-    scanned = [d for d in after_parts if stats_keep(d)]
-    return active, after_parts, scanned
 
 
 @op("sink_txn_optimize_zorder", oracle="""
@@ -2066,7 +1898,7 @@ def sink_txn_optimize_zorder(spark: SparkSession,
     (user_id, ts), land the rewrite as z-RANGE dirs whose manifest
     records per-dir min/max for BOTH columns, and prove that a
     single-column predicate on EITHER dimension prunes dirs through
-    `txn_prune_dirs_full` — the one-sort-order-serves-two-columns
+    `txn_prune_dirs` — the one-sort-order-serves-two-columns
     property that makes ZORDER worth a rewrite at 100 TB.
 
     Stage: 4 commits slice events by event_id % 4, so NEITHER dimension
@@ -2095,24 +1927,16 @@ def sink_txn_optimize_zorder(spark: SparkSession,
     ``repartitionByRange(zval)`` into ~1 GB files); per-dir stats are
     one 4-row aggregate; pruning stays driver-side interval arithmetic
     over driver-scale manifests. Idempotent: staging wiped per run."""
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_optimize_zorder")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
+    data, log = _txn_table("sink_txn_optimize_zorder")
 
     for v in range(1, 5):
-        ev.filter(F.col("event_id") % 4 == v - 1).repartition(1) \
-          .write.mode("overwrite").parquet(os.path.join(data, f"s{v}"))
-        txn_commit(log, v, [f"s{v}"], [])
+        _txn_append(ev.filter(F.col("event_id") % 4 == v - 1), data, log,
+                    v, f"s{v}")
 
     # OPTIMIZE ZORDER BY (user_id, ts) against base version 4
-    snap4 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, 4)])
+    snap4 = _txn_read(spark, data, txn_active_dirs(log, 4), ev.schema)
     b = snap4.agg(F.min("user_id").alias("ulo"),
                   F.max("user_id").alias("uhi"),
                   F.min(F.unix_micros("ts")).alias("tlo"),
@@ -2161,17 +1985,12 @@ def sink_txn_optimize_zorder(spark: SparkSession,
     tcut = tlo + (8 * tw - 1) // 16   # max epoch-us with band < 8
 
     def pruned_vs_full(col_preds: dict, pred):
-        active, _, scanned = txn_prune_dirs_full(log, 5,
-                                                 col_preds=col_preds)
-        full = spark.read.schema(ev.schema).parquet(
-            *[os.path.join(data, d) for d in active]).filter(pred) \
-            if active else spark.createDataFrame([], ev.schema)
-        pr = spark.read.schema(ev.schema).parquet(
-            *[os.path.join(data, d) for d in scanned]).filter(pred) \
-            if scanned else spark.createDataFrame([], ev.schema)
-        g, w = _txn_canon(pr).collect()[0], _txn_canon(full).collect()[0]
-        return len(active), len(scanned), int(g["n"]), \
-            int(tuple(g) == tuple(w))
+        active, _, scanned = txn_prune_dirs(log, 5, col_preds=col_preds)
+        g = _txn_canon(_txn_read(spark, data, scanned, ev.schema)
+                       .filter(pred))
+        w = _txn_canon(_txn_read(spark, data, active, ev.schema)
+                       .filter(pred))
+        return len(active), len(scanned), g[0], int(g == w)
 
     n_active, n_scan_u, n_rows_u, ok_u = pruned_vs_full(
         {"user_id": (ulo, ucut + 1)}, F.col("user_id") <= F.lit(ucut))
@@ -2179,16 +1998,11 @@ def sink_txn_optimize_zorder(spark: SparkSession,
         {"ts": (tlo, tcut + 1)},
         F.unix_micros("ts") <= F.lit(tcut))
 
-    dirs5 = txn_active_dirs(log, 5)
-    snap5 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in dirs5]) \
-        if dirs5 else spark.createDataFrame([], ev.schema)
-    got, want = _txn_canon(snap5).collect()[0], \
-        _txn_canon(ev).collect()[0]
+    got = _txn_canon(_txn_read(spark, data, txn_active_dirs(log, 5),
+                               ev.schema))
     return spark.createDataFrame(
         [(5, n_active, n_scan_u, n_rows_u, ok_u,
-          n_scan_t, n_rows_t, ok_t,
-          int(tuple(got) == tuple(want)))],
+          n_scan_t, n_rows_t, ok_t, int(got == _txn_canon(ev)))],
         "version_optimize int, n_dirs_active long, n_scanned_user long, "
         "n_rows_user long, user_prune_matches_full int, "
         "n_scanned_ts long, n_rows_ts long, ts_prune_matches_full int, "
@@ -2243,15 +2057,9 @@ def sink_txn_partition_prune(spark: SparkSession,
     dirs before a single min/max is read). The surviving scan is the
     ordinary multi-dir read with the residual filter pushed down.
     Idempotent: staging wiped per run."""
-    import shutil as _shutil
-
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    base = _scratch("sink_txn_partition_prune")
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
+    data, log = _txn_table("sink_txn_partition_prune")
 
     split = F.lit(_PART_SPLIT).cast("timestamp")
     types = [r["event_type"] for r in
@@ -2264,91 +2072,53 @@ def sink_txn_partition_prune(spark: SparkSession,
             v += 1
             d = f"{et}_{half}"
             sl = ev.filter((F.col("event_type") == et) & cond)
-            sl.repartition(1).write.mode("overwrite") \
-              .parquet(os.path.join(data, d))
-            st = sl.agg(F.min(F.unix_micros("ts")).alias("lo"),
-                        F.max(F.unix_micros("ts")).alias("hi")) \
-                   .collect()[0]
-            extra = {"parts": {d: {"event_type": et}}}
-            if st["lo"] is not None:
-                extra["colstats"] = {d: {"ts": {"min": int(st["lo"]),
-                                                "max": int(st["hi"])}}}
-            txn_commit(log, v, [d], [], extra=extra)
+            _txn_append(sl, data, log, v, d, extra={
+                "parts": {d: {"event_type": et}},
+                "colstats": _txn_ts_colstats(sl, d)})
 
-    active, after_parts, scanned = txn_prune_dirs_full(
-        log, v, part_eq={"event_type": "click"},
-        col_preds={"ts": (_PART_LO, _PART_HI)})
+    preds = {"part_eq": {"event_type": "click"},
+             "col_preds": {"ts": (_PART_LO, _PART_HI)}}
+    active, after_parts, scanned = txn_prune_dirs(log, v, **preds)
     pred = ((F.col("event_type") == "click")
             & (F.col("ts") >= F.timestamp_micros(F.lit(_PART_LO)))
             & (F.col("ts") < F.timestamp_micros(F.lit(_PART_HI))))
-    full = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in active]).filter(pred) \
-        if active else spark.createDataFrame([], ev.schema)
-    pruned = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in scanned]).filter(pred) \
-        if scanned else spark.createDataFrame([], ev.schema)
-    got, want = _txn_canon(pruned).collect()[0], \
-        _txn_canon(full).collect()[0]
+    got = _txn_canon(_txn_read(spark, data, scanned, ev.schema)
+                     .filter(pred))
+    want = _txn_canon(_txn_read(spark, data, active, ev.schema)
+                      .filter(pred))
 
     # safety: a dir committed with NO partition value and NO stats
     # must survive both prune stages even though its data (a copy of
-    # the click h2 slice; empty-corpus guard: an empty frame) matches
-    # neither predicate leg
-    src_dir = os.path.join(data, "click_h2")
-    back = spark.read.schema(ev.schema).parquet(src_dir) \
-        if os.path.isdir(src_dir) else spark.createDataFrame([], ev.schema)
-    back.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "nometa"))
-    txn_commit(log, v + 1, ["nometa"], [])
-    _, ap2, sc2 = txn_prune_dirs_full(
-        log, v + 1, part_eq={"event_type": "click"},
-        col_preds={"ts": (_PART_LO, _PART_HI)})
+    # the click h2 slice — none on an empty corpus, which commits no
+    # slice dirs) matches neither predicate leg
+    _txn_append(_txn_read(spark, data,
+                          [d for d in active if d == "click_h2"],
+                          ev.schema),
+                data, log, v + 1, "nometa")
+    _, ap2, sc2 = txn_prune_dirs(log, v + 1, **preds)
     partless_kept = int("nometa" in ap2 and "nometa" in sc2
                         and set(scanned) <= set(sc2))
 
     return spark.createDataFrame(
-        [(len(active), len(after_parts), len(scanned), int(got["n"]),
-          int(tuple(got) == tuple(want)), partless_kept)],
+        [(len(active), len(after_parts), len(scanned), got[0],
+          int(got == want), partless_kept)],
         "n_dirs_active long, n_dirs_after_partition long, "
         "n_dirs_scanned long, n_rows_pred long, "
         "prune_matches_full int, partless_dir_never_pruned int")
 
 
 def _txn_stage_merge_history(spark: SparkSession, ev: DataFrame,
-                             base: str) -> tuple[str, str]:
-    """Shared staging for the CDF-family demos: v1 loads the base slice
-    (event_id % 3 == 0), v2 MERGEs the % 5 change feed (even ids
-    delete, odd ids upsert value + 1000 — `sink_txn_merge`'s
-    semantics), v3 OPTIMIZEs (pure rewrite, zero semantic change).
-    Returns (data_root, log_dir)."""
-    import shutil as _shutil
-
-    data, log = os.path.join(base, "data"), os.path.join(base, "_log")
-    if os.path.exists(base):
-        _shutil.rmtree(base)
-    os.makedirs(log, exist_ok=True)
-
-    base_df = ev.filter(F.col("event_id") % 3 == 0)
-    base_df.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v1"))
-    txn_commit(log, 1, ["v1"], [])
-
-    src = ev.filter(F.col("event_id") % 5 == 0)
-    upserts = src.filter(F.col("event_id") % 2 == 1) \
-                 .withColumn("value", F.col("value") + F.lit(1000.0))
-    snap1 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, 1)])
-    merged = (snap1.join(src.select("event_id"), "event_id", "left_anti")
-                   .unionByName(upserts.select(*snap1.columns)))
-    merged.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v2_merge"))
-    txn_commit(log, 2, ["v2_merge"], ["v1"])
-
-    snap2 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, 2)])
-    snap2.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "opt"))
-    txn_commit(log, 3, ["opt"], ["v2_merge"])
+                             key: str) -> tuple[str, str]:
+    """Shared staging for the CDF-family demos, on op ``key``'s fresh
+    table: v1 loads the base slice (event_id % 3 == 0), v2 MERGEs the
+    % 5 change feed (even ids delete, odd ids upsert value + 1000 —
+    `sink_txn_merge`'s semantics), v3 OPTIMIZEs (pure rewrite, zero
+    semantic change). Returns (data_root, log_dir)."""
+    data, log = _txn_table(key)
+    _txn_append(ev.filter(F.col("event_id") % 3 == 0), data, log, 1, "v1")
+    _txn_merge(spark, ev, data, log, 2, 5, 1000.0, "v2_merge")
+    _txn_append(_txn_read(spark, data, txn_active_dirs(log, 2), ev.schema),
+                data, log, 3, "opt", ["v2_merge"])
     return data, log
 
 
@@ -2418,20 +2188,10 @@ def sink_txn_changes_feed(spark: SparkSession,
     Idempotent: staging wiped per run."""
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    data, log = _txn_stage_merge_history(
-        spark, ev, _scratch("sink_txn_changes_feed"))
-
+    data, log = _txn_stage_merge_history(spark, ev,
+                                         "sink_txn_changes_feed")
     # v4: second merge (% 7 feed) against snapshot(3)
-    src = ev.filter(F.col("event_id") % 7 == 0)
-    upserts = src.filter(F.col("event_id") % 2 == 1) \
-                 .withColumn("value", F.col("value") + F.lit(2000.0))
-    snap3 = spark.read.schema(ev.schema).parquet(
-        *[os.path.join(data, d) for d in txn_active_dirs(log, 3)])
-    merged = (snap3.join(src.select("event_id"), "event_id", "left_anti")
-                   .unionByName(upserts.select(*snap3.columns)))
-    merged.repartition(1).write.mode("overwrite") \
-        .parquet(os.path.join(data, "v4_merge"))
-    txn_commit(log, 4, ["v4_merge"], ["opt"])
+    _txn_merge(spark, ev, data, log, 4, 7, 2000.0, "v4_merge")
 
     feeds = [txn_changes(spark, data, log, ev.schema, "event_id",
                          v - 1, v)
@@ -2488,8 +2248,7 @@ def sink_txn_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     wiped per run."""
     configure(spark)
     ev = load(spark, sf_dir, "events")
-    data, log = _txn_stage_merge_history(
-        spark, ev, _scratch("sink_txn_restore"))
+    data, log = _txn_stage_merge_history(spark, ev, "sink_txn_restore")
 
     dirs_before = sorted(os.listdir(data))
     restore_to = txn_active_dirs(log, 1)
@@ -2500,14 +2259,13 @@ def sink_txn_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     txn_commit(log, 4, restore_to, removing)
     dirs_after = sorted(os.listdir(data))
 
-    def snap(version: int) -> DataFrame:
-        return spark.read.schema(ev.schema).parquet(
-            *[os.path.join(data, d)
-              for d in txn_active_dirs(log, version)])
+    def snap(version: int) -> tuple:
+        return _txn_canon(_txn_read(spark, data,
+                                    txn_active_dirs(log, version),
+                                    ev.schema))
 
-    got4, got1 = _txn_canon(snap(4)).collect()[0], \
-        _txn_canon(snap(1)).collect()[0]
-    restore_ok = int(tuple(got4) == tuple(got1))
+    got4 = snap(4)
+    restore_ok = int(got4 == snap(1))
     # history intact: v3 still resolves to the merged content
     eid = F.col("event_id")
     expected3 = (ev.filter((eid % 3 == 0) & ~(eid % 5 == 0))
@@ -2515,9 +2273,7 @@ def sink_txn_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ev.filter((eid % 5 == 0) & (eid % 2 == 1))
                          .withColumn("value",
                                      F.col("value") + F.lit(1000.0))))
-    got3, want3 = _txn_canon(snap(3)).collect()[0], \
-        _txn_canon(expected3).collect()[0]
-    history_ok = int(tuple(got3) == tuple(want3))
+    history_ok = int(snap(3) == _txn_canon(expected3))
 
     # the restore's CDF is the merge's CDF inverted
     undo = txn_changes(spark, data, log, ev.schema, "event_id", 3, 4)
@@ -2530,12 +2286,11 @@ def sink_txn_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.lit("update")).alias("change_type"),
         F.col("value_after").alias("value_before"),
         F.col("value_before").alias("value_after"))
-    gu, wu = _txn_canon(undo).collect()[0], \
-        _txn_canon(inverted).collect()[0]
+    gu = _txn_canon(undo)
     return spark.createDataFrame(
-        [(4, int(got4["n"]), restore_ok, history_ok,
-          int(dirs_before == dirs_after), int(gu["n"]),
-          int(tuple(gu) == tuple(wu)))],
+        [(4, got4[0], restore_ok, history_ok,
+          int(dirs_before == dirs_after), gu[0],
+          int(gu == _txn_canon(inverted)))],
         "version_restore int, n_rows_restored long, "
         "restore_matches_v1 int, history_intact int, metadata_only int, "
         "n_changes_undo long, undo_is_inverse int")

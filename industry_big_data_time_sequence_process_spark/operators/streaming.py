@@ -1810,7 +1810,7 @@ def sink_txn_stream_exactly_once(spark: SparkSession,
     referenced (vacuum garbage); die after commit -> the replay
     no-ops. No window double-lands a row. Idempotent end-to-end: the
     whole staging tree is wiped per run."""
-    from .sources_sinks import (_txn_canon, txn_active_dirs,
+    from .sources_sinks import (_txn_canon, _txn_read, txn_active_dirs,
                                 txn_head_version, txn_last_epoch,
                                 txn_stream_commit)
 
@@ -1844,16 +1844,12 @@ def sink_txn_stream_exactly_once(spark: SparkSession,
     last_epoch, _ = txn_last_epoch(log, app)
     n_epochs = 0 if last_epoch is None else last_epoch + 1
 
-    def snapshot(version: int) -> DataFrame:
-        dirs = txn_active_dirs(log, version) if version else []
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(
-            *[os.path.join(data, d) for d in dirs])
+    def snapshot(version: int) -> tuple:
+        return _txn_canon(_txn_read(spark, data,
+                                    txn_active_dirs(log, version), schema))
 
-    got = _txn_canon(snapshot(head)).collect()[0]
-    want = _txn_canon(load(spark, sf_dir, "events")).collect()[0]
-    content_ok = int(tuple(got) == tuple(want))
+    got = snapshot(head)
+    content_ok = int(got == _txn_canon(load(spark, sf_dir, "events")))
 
     # forced replay: re-drive the first and last micro-batches through
     # the IDENTICAL writer path (a post-crash re-run delivers the same
@@ -1864,11 +1860,10 @@ def sink_txn_stream_exactly_once(spark: SparkSession,
             .parquet(os.path.join(indir, f"slice_{epoch_id}.parquet"))
         land_batch(decode_events_ts(replay_df, sf_dir), epoch_id)
     replay_noop = int(txn_head_version(log) == head)
-    got2 = _txn_canon(snapshot(txn_head_version(log))).collect()[0]
-    replay_content = int(tuple(got2) == tuple(got))
+    replay_content = int(snapshot(txn_head_version(log)) == got)
 
     return spark.createDataFrame(
-        [(n_epochs, head, int(got["n"]), content_ok, replay_noop,
+        [(n_epochs, head, got[0], content_ok, replay_noop,
           replay_content)],
         "n_epochs long, n_commits long, n_rows_table long, "
         "content_ok int, replay_noop int, replay_preserves_content int")

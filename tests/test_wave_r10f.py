@@ -3,10 +3,10 @@
 - `ts_mann_kendall`: a planted monotone ramp is flagged significant
   with the exact closed-form S/z; the white-noise corpus channels are
   all insignificant (the test's reason to exist);
-- `sink_txn_log_snapshot`: snapshot row counts match independent
-  source-slice counts per version, the v3 rewrite provably preserves
-  v2's content, and the op is idempotent under re-runs (the crash-
-  recovery property).
+- `dq_sequence_islands`: planted gaps yield exact islands.
+
+The `sink_txn_log_snapshot` pins live with the rest of the
+transaction-log tests in tests/test_txn_log.py.
 """
 import duckdb
 import pytest
@@ -62,23 +62,6 @@ def test_mann_kendall_noise_corpus_insignificant(spark):
     assert len(out) == 5
     for r in out:
         assert r["trend_significant"] == 0, r
-
-
-def test_txn_log_snapshots_and_idempotency(spark):
-    rows1 = sorted(REGISTRY["sink_txn_log_snapshot"].fn(spark, SF_T2)
-                   .collect(), key=lambda r: r["version"])
-    con = duckdb.connect()
-    n0 = con.sql(f"SELECT count(*) FROM '{SF_T2}/events.parquet' "
-                 f"WHERE event_id % 3 = 0").fetchone()[0]
-    n01 = con.sql(f"SELECT count(*) FROM '{SF_T2}/events.parquet' "
-                  f"WHERE event_id % 3 IN (0, 1)").fetchone()[0]
-    assert [(r["version"], r["n_active_commits"], r["n_rows"]) for r in
-            rows1] == [(1, 1, n0), (2, 2, n01), (3, 2, n01)]
-    assert all(r["rewrite_preserves_content"] == 1 for r in rows1)
-    # idempotency: a re-run (crash recovery) returns the identical table
-    rows2 = sorted(REGISTRY["sink_txn_log_snapshot"].fn(spark, SF_T2)
-                   .collect(), key=lambda r: r["version"])
-    assert [tuple(r) for r in rows1] == [tuple(r) for r in rows2]
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,6 @@
   domain (where the old fixed /1024 bucket would leave a ~10^7-row
   offsets table) still yields exact islands with the range-derived
   width;
-- transaction-log MERGE / concurrent-commit conflict / vacuum
-  (`sink_txn_merge`, `sink_txn_vacuum`) — VERDICT r10 missing #1;
 - corpus-trained BPE merges (`text_bpe_train`) + merged-token budget
   twins — VERDICT r10 missing #2;
 - Yule-Walker AR(2) (`ts_ar2_forecast`) + champion enrollment —
@@ -13,6 +11,9 @@
 - large-star/small-star CC (`dedup_cluster_cc_star`) green on a
   planted high-diameter chain the 10-round path refuses —
   VERDICT r10 missing #4.
+
+The round's transaction-log MERGE / conflict / vacuum pins live in
+tests/test_txn_log.py.
 """
 import pytest
 
@@ -58,54 +59,6 @@ def test_sequence_islands_sparse_id_domain(spark, sparse_id_corpus):
         (2, 10_000_000_000, 10_000_000_000, 1, 19_999_999_999),
         (3, 30_000_000_000, 30_000_000_001, 2, None),
     ]
-
-
-# ---------------------------------------------------------------------------
-# transaction log: MERGE / conflict / vacuum (round 11, §2.37)
-# ---------------------------------------------------------------------------
-
-
-def test_txn_concurrent_commit_conflict(tmp_path):
-    """Two writers prepare commits against the same base version; the
-    second must fail LOUDLY with TxnConflictError, not silently clobber
-    the first writer's manifest."""
-    from industry_big_data_time_sequence_process_spark.operators.sources_sinks import (
-        TxnConflictError, txn_active_dirs, txn_commit)
-
-    log = str(tmp_path / "_log")
-    import os
-    os.makedirs(log)
-    txn_commit(log, 1, ["v1"], [])
-    # both writers read snapshot@1 and prepare version 2
-    txn_commit(log, 2, ["v2_writer_a"], [])          # writer A wins
-    with pytest.raises(TxnConflictError):
-        txn_commit(log, 2, ["v2_writer_b"], ["v1"])  # writer B must fail
-    # the winning manifest is intact — B's attempt changed nothing
-    assert txn_active_dirs(log, 2) == ["v1", "v2_writer_a"]
-
-
-def test_txn_merge_idempotent_rerun(spark):
-    """Crash recovery: re-running the merge op rebuilds the same staged
-    table and returns the identical audit row (both proofs hold)."""
-    r1 = REGISTRY["sink_txn_merge"].fn(spark, SF_T2).collect()[0]
-    r2 = REGISTRY["sink_txn_merge"].fn(spark, SF_T2).collect()[0]
-    assert tuple(r1) == tuple(r2)
-    assert r1["merge_preserves_content"] == 1
-    assert r1["base_time_travel_intact"] == 1
-    assert r1["n_final"] == (r1["n_base"] - r1["n_deleted"]
-                             + r1["n_inserted"])
-
-
-def test_txn_vacuum_retention_contract(spark):
-    """Post-horizon snapshot resolves byte-identically after vacuum;
-    the pre-horizon snapshot fails loudly; re-running is idempotent."""
-    r1 = REGISTRY["sink_txn_vacuum"].fn(spark, SF_T2).collect()[0]
-    assert (r1["n_dirs_before"], r1["n_dirs_after"],
-            r1["n_vacuumed"]) == (3, 2, 1)
-    assert r1["latest_content_intact"] == 1
-    assert r1["pre_horizon_unreadable"] == 1
-    r2 = REGISTRY["sink_txn_vacuum"].fn(spark, SF_T2).collect()[0]
-    assert tuple(r1) == tuple(r2)
 
 
 # ---------------------------------------------------------------------------
