@@ -19,10 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ..api import (bucketed_ntile, bucketed_order_statistic,
-                   bucketed_running_sum, hash32)
+from ..api import bucketed_ntile, bucketed_running_sum, hash32
 from ..registry import REGISTRY, op
 from ..sources.io import load
+from .sampling import _split_cutoff, _split_cutoff_scalable
 
 #: DuckDB: first 8 hex digits of md5 as int64 (portable hash32).
 from ..api import DUCK_H32 as _DUCK_H32  # one shared definition
@@ -347,13 +347,7 @@ def feat_time_split_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     parent encoder.
     """
     ev = load(spark, sf_dir, "events")
-    w = Window.orderBy("ts", "event_id")
-    e = ev.select("event_type", "value", "ts",
-                  F.row_number().over(w).alias("rn"),
-                  F.count("*").over(Window.partitionBy()).alias("n"))
-    cut = (e.filter(F.col("rn") == F.floor(0.8 * F.col("n")).cast("long"))
-            .select(F.col("ts").alias("cutoff")))
-    return _time_split_encode_output(ev, cut)
+    return _time_split_encode_output(ev, _split_cutoff(ev))
 
 
 def _time_split_encode_output(ev: DataFrame, cut: DataFrame) -> DataFrame:
@@ -382,19 +376,6 @@ def _time_split_encode_output(ev: DataFrame, cut: DataFrame) -> DataFrame:
                          F.round(enc_t, 6).alias("encoded_train_only"),
                          F.round(enc_f, 6).alias("encoded_leaky"),
                          F.round(enc_f - enc_t, 6).alias("leakage_bias")))
-
-
-def _split_cutoff_scalable(ev: DataFrame) -> DataFrame:
-    """The exact floor(0.8·n)-th (ts, event_id)-ordered event time as a
-    1-row ``cutoff`` frame, via the two-phase order statistic: hour
-    buckets (monotone in ts) bound the only sorted partition to one hour
-    of events; the bucket holding the target rank is located from the
-    tiny bucket-count table and broadcast-pruned before the sort. Exact
-    twin of the ``row_number() = floor(0.8*n)`` formulation."""
-    return bucketed_order_statistic(
-        ev.select("ts", "event_id"), F.date_trunc("hour", "ts"),
-        [F.col("ts"), F.col("event_id")], 0.8) \
-        .select(F.col("ts").alias("cutoff"))
 
 
 @op("feat_time_split_encode_scalable",
@@ -465,13 +446,7 @@ def feat_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     PSI).
     """
     ev = load(spark, sf_dir, "events")
-    w = Window.orderBy("ts", "event_id")
-    e = ev.select("value", "ts",
-                  F.row_number().over(w).alias("rn"),
-                  F.count("*").over(Window.partitionBy()).alias("n"))
-    cut = (e.filter(F.col("rn") == F.floor(0.8 * F.col("n")).cast("long"))
-            .select(F.col("ts").alias("cutoff")))
-    return _psi_output(ev, cut)
+    return _psi_output(ev, _split_cutoff(ev))
 
 
 def _psi_output(ev: DataFrame, cut: DataFrame) -> DataFrame:

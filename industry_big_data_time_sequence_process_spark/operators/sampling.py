@@ -326,14 +326,33 @@ def sample_split_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     else identical (the labeling is a broadcast compare either way).
     """
     ev = load(spark, sf_dir, "events")
-    w = Window.orderBy("ts", "event_id")
-    e = ev.select("user_id", "ts",
-                  F.row_number().over(w).alias("rn"),
-                  F.count("*").over(
-                      Window.partitionBy()).alias("n"))
-    cut = (e.filter(F.col("rn") == F.floor(0.8 * F.col("n")).cast("long"))
-            .select(F.col("ts").alias("cutoff")))
-    return _split_temporal_output(ev, cut)
+    return _split_temporal_output(ev, _split_cutoff(ev))
+
+
+def _split_cutoff(ev: DataFrame) -> DataFrame:
+    """The exact floor(0.8·n)-th (ts, event_id)-ordered event time as a
+    1-row ``cutoff`` frame, by a global ``row_number`` — the 80%
+    temporal cutoff of ``sample_split_temporal``,
+    ``feat_time_split_encode`` and ``feat_psi_drift`` (one unpartitioned
+    window: exact at test scale; the ``*_scalable`` twins use
+    :func:`_split_cutoff_scalable`)."""
+    e = ev.select("ts", F.row_number().over(
+                      Window.orderBy("ts", "event_id")).alias("rn"),
+                  F.count("*").over(Window.partitionBy()).alias("n"))
+    return (e.filter(F.col("rn") == F.floor(0.8 * F.col("n")).cast("long"))
+             .select(F.col("ts").alias("cutoff")))
+
+
+def _split_cutoff_scalable(ev: DataFrame) -> DataFrame:
+    """Exact twin of :func:`_split_cutoff` via the two-phase order
+    statistic: hour buckets (monotone in ts) bound the only sorted
+    partition to one hour of events; the bucket holding the target rank
+    is located from the tiny bucket-count table and broadcast-pruned
+    before the sort (``api.bucketed_order_statistic``)."""
+    return bucketed_order_statistic(
+        ev.select("ts", "event_id"), F.date_trunc("hour", "ts"),
+        [F.col("ts"), F.col("event_id")], 0.8) \
+        .select(F.col("ts").alias("cutoff"))
 
 
 def _split_temporal_output(ev: DataFrame, cut: DataFrame) -> DataFrame:
@@ -369,11 +388,7 @@ def sample_split_temporal_scalable(spark: SparkSession,
     hour of events at any corpus size. Exact twin — reuses the
     baseline's oracle verbatim."""
     ev = load(spark, sf_dir, "events")
-    cut = bucketed_order_statistic(
-        ev.select("ts", "event_id"), F.date_trunc("hour", "ts"),
-        [F.col("ts"), F.col("event_id")], 0.8) \
-        .select(F.col("ts").alias("cutoff"))
-    return _split_temporal_output(ev, cut)
+    return _split_temporal_output(ev, _split_cutoff_scalable(ev))
 
 
 #: Block-bootstrap replicas (deterministic md5 draws, like every sampler

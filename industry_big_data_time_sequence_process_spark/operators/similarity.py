@@ -21,6 +21,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from ..cc import cc_star, min_label_cc
 from ..registry import REGISTRY, op
 from ..sources.io import load
 
@@ -4782,9 +4783,9 @@ def dedup_semantic_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the pairwise keeper).
 
     Same bounded-round min-label propagation as the MinHash CC
-    (duplicate clusters are near-cliques inside a sub-cell, so the
-    fixpoint lands in ~2 rounds; the driver loop is over ROUNDS with a
-    distributed fixpoint check, never rows); the DuckDB oracle reaches
+    (``cc.min_label_cc``: duplicate clusters are near-cliques inside a
+    sub-cell, so the fixpoint lands in ~2 rounds; a component of
+    diameter > 10 raises); the DuckDB oracle reaches
     the identical fixpoint by a recursive CTE. The pair graph reuses
     the MEMOIZED two-level index frame, so running drop list + clusters
     together builds the index once.
@@ -4793,37 +4794,10 @@ def dedup_semantic_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~n·occ bounded since r9, never all-pairs; each round is one
     edge-keyed join + one min-aggregate over the (duplicate-population-
     sized, much smaller than corpus) label frame."""
-    pairs = _semantic_cc_pairs(spark, sf_dir)
-    edges = (pairs.unionByName(pairs.select(F.col("v2").alias("v1"),
-                                            F.col("v1").alias("v2")))
-                  .withColumnsRenamed({"v1": "a", "v2": "b"})
-                  .localCheckpoint())
-    labels = (edges.select(F.col("a").alias("node")).distinct()
-                   .withColumn("lbl", F.col("node")).localCheckpoint())
-    for _ in range(10):  # cap; real exit is the fixpoint check below
-        prop = (edges.join(labels, edges.a == labels.node)
-                     .groupBy(F.col("b").alias("node"))
-                     .agg(F.min("lbl").alias("nbr_lbl")))
-        new = (labels.join(prop, "node", "left")
-                     .select("node", F.least(
-                         "lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl"))
-               ).localCheckpoint()
-        changed = (new.alias("n").join(labels.alias("o"), "node")
-                      .filter(F.col("n.lbl") != F.col("o.lbl"))
-                      .limit(1).count())
-        labels = new
-        if changed == 0:
-            break
-    else:
-        # ADVICE r9: sub-cells can hold up to the envelope-bound vector
-        # count, so a component with diameter > the round cap is
-        # possible in principle — diverge LOUDLY from the recursive-CTE
-        # oracle's guaranteed fixpoint instead of returning wrong labels.
-        raise RuntimeError(
-            "dedup_semantic_cluster_cc: min-label propagation did not "
-            "reach a fixpoint within the round cap (diameter > 10)")
-    return labels.select(F.col("node").alias("vec_id"),
-                         F.col("lbl").alias("cluster_id"))
+    pairs = _semantic_cc_pairs(spark, sf_dir).select(
+        F.col("v1").alias("a"), F.col("v2").alias("b"))
+    return min_label_cc(pairs).select(F.col("node").alias("vec_id"),
+                                      F.col("lbl").alias("cluster_id"))
 
 
 @op("dedup_semantic_cluster_cc_star",
@@ -4847,8 +4821,6 @@ def dedup_semantic_cluster_cc_star(spark: SparkSession,
     over the duplicate-population-sized edge list, eagerly
     checkpointed — same per-round cost as min-label, shape-independent
     round count."""
-    from ..cc import cc_star
-
     pairs = _semantic_cc_pairs(spark, sf_dir).select(
         F.col("v1").alias("a"), F.col("v2").alias("b"))
     return cc_star(pairs).select(F.col("node").alias("vec_id"),

@@ -12,6 +12,7 @@ Streaming sources/sinks live in ``streaming.py``.
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import shutil
@@ -827,7 +828,11 @@ def txn_checkpoint(log_dir: str, version: int, *,
        same version — threads of one driver included — converge on
        byte-identical content);
     2. publish the ``_last_checkpoint`` pointer — monotonic: an
-       already-equal-or-newer pointer is left alone.
+       already-equal-or-newer pointer is left alone. The compare and
+       the publish run under an exclusive ``flock`` on
+       ``_last_checkpoint.lock`` in the log dir, so two checkpointers
+       (threads or processes) racing different versions always leave
+       the newer one.
 
     A crash BETWEEN the steps is safe by construction: the pointer
     still names the previous checkpoint (or none), resolution falls
@@ -850,10 +855,14 @@ def txn_checkpoint(log_dir: str, version: int, *,
     _txn_publish(log_dir, f"_checkpoint.{version}.json", obj, os.replace)
     if crash_before_pointer_swap:
         return
-    if _txn_last_checkpoint(log_dir)[0] >= version:
-        return
-    _txn_publish(log_dir, "_last_checkpoint", {"version": version},
-                 os.replace)
+    # read-compare-publish is one critical section: without it a
+    # checkpointer of v4 can read the old pointer, lose the CPU to one
+    # that publishes v8, then replace v8 with 4
+    with open(os.path.join(log_dir, "_last_checkpoint.lock"), "a") as lk:
+        fcntl.flock(lk, fcntl.LOCK_EX)
+        if _txn_last_checkpoint(log_dir)[0] < version:
+            _txn_publish(log_dir, "_last_checkpoint", {"version": version},
+                         os.replace)
 
 
 def txn_version_at_resolve(log_dir: str,

@@ -521,7 +521,7 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..api import hot_shingles, minhash_band_signatures, \
         word_shingles_raw
     from .text import (_SHINGLE_DF_CAP_FLOOR, _SHINGLE_DF_CAP_FRAC,
-                       _minhash_bands)
+                       _jaccard_verify, _minhash_bands)
 
     configure(spark)
     key = "stream_ingest_dedup"
@@ -552,37 +552,21 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .join(F.broadcast(hot), "s", "left_anti")
                         .withColumnRenamed("s", "token"))
     corp = _minhash_bands(tok_corp).select(
-        F.col("doc_id").alias("dup_of"),
+        F.col("doc_id").alias("doc2"),
         F.col("band").alias("band2"), F.col("sig").alias("sig2"))
-    sizes2 = tok_corp.groupBy("doc_id").agg(F.count("*").alias("n2")) \
-        .withColumnRenamed("doc_id", "dup_of")
 
     def serve(batch_df: DataFrame, batch_id: int) -> None:
         tok_b = (word_shingles_raw(batch_df, "doc_id", "text")
                  .join(F.broadcast(hot), "s", "left_anti")
                  .withColumnRenamed("s", "token"))
         newb = minhash_band_signatures(tok_b, "doc_id", "token") \
-            .select(F.col("doc_id").alias("new_doc"), "band", "sig")
+            .select(F.col("doc_id").alias("doc1"), "band", "sig")
         cand = (newb.join(corp, (F.col("band") == F.col("band2"))
                           & (F.col("sig") == F.col("sig2")))
-                    .select("new_doc", "dup_of").distinct())
-        ta = tok_b.select(F.col("doc_id").alias("new_doc"), "token")
-        tb = tok_corp.select(F.col("doc_id").alias("_d2"),
-                             F.col("token").alias("token2"))
-        verified = (cand.join(ta, "new_doc")
-                        .join(tb, (F.col("dup_of") == F.col("_d2"))
-                              & (F.col("token") == F.col("token2")))
-                        .groupBy("new_doc", "dup_of")
-                        .agg(F.count("*").alias("common")))
-        s1 = tok_b.groupBy("doc_id").agg(F.count("*").alias("n1")) \
-            .withColumnRenamed("doc_id", "new_doc")
-        jac = (F.col("common").cast("double")
-               / (F.col("n1") + F.col("n2") - F.col("common")))
-        kill = (verified.join(F.broadcast(s1), "new_doc")
-                        .join(F.broadcast(sizes2), "dup_of")
-                        .filter(jac >= 0.5)
-                        .select("new_doc", "dup_of",
-                                F.round(jac, 6).alias("jaccard")))
+                    .select("doc1", "doc2").distinct())
+        kill = _jaccard_verify(cand, tok_b, tok_corp).select(
+            F.col("doc1").alias("new_doc"), F.col("doc2").alias("dup_of"),
+            "jaccard")
         kill.write.mode("overwrite").parquet(
             os.path.join(out, f"batch_id={batch_id}"))
 

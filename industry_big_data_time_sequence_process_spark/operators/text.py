@@ -24,6 +24,7 @@ from ..sources.io import load
 
 # Portable 32-bit token hash (see module docstring).
 from ..api import DUCK_H32 as _DUCK_H32  # one shared definition
+from ..cc import cc_star, min_label_cc
 
 
 def _h32(c: Column) -> Column:
@@ -501,6 +502,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MINHASH_K = 16       # signature length
 _MINHASH_BANDS = 4    # 4 bands x 4 rows: catches jaccard >~ 0.7
+#: Exact-Jaccard keep threshold of every MinHash candidate verify
+#: (`_jaccard_verify`; the batch, incremental, streaming and pipeline
+#: near-dup stages and their oracles).
+_MINHASH_JACCARD_TAU = 0.5
 
 
 def _minhash_bands(tok: DataFrame) -> DataFrame:
@@ -544,7 +549,7 @@ SELECT v.doc1, v.doc2,
 FROM verified v
 JOIN sizes s1 ON s1.doc_id = v.doc1
 JOIN sizes s2 ON s2.doc_id = v.doc2
-WHERE CAST(v.common AS DOUBLE) / (s1.n + s2.n - v.common) >= 0.5
+WHERE CAST(v.common AS DOUBLE) / (s1.n + s2.n - v.common) >= {_MINHASH_JACCARD_TAU}
 """, tier=2, section="2.11")
 def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup detection, the scale path for dedup:
@@ -567,9 +572,11 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_pairs(tok: DataFrame, bands: DataFrame) -> DataFrame:
     """Band-collision candidates + exact-Jaccard verify over PREBUILT
     shingle and band-signature frames — the serve-side core shared by
-    ``dedup_near_minhash`` and the bench build/serve split (VERDICT
-    r6 #3: the band index is the build artifact; pair generation is the
-    per-ingest serve cost)."""
+    ``dedup_near_minhash``, the pipeline's ``near_dedup`` and the bench
+    build/serve split (VERDICT r6 #3: the band index is the build
+    artifact; pair generation is the per-ingest serve cost). The band
+    self-join yields each colliding ``doc1 < doc2`` pair once;
+    :func:`_jaccard_verify` keeps the true near-dups."""
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -579,23 +586,37 @@ def _minhash_pairs(tok: DataFrame, bands: DataFrame) -> DataFrame:
                  F.col("b.doc_id").alias("doc2"))
          .distinct()
     )
-    ta = tok.select(F.col("doc_id").alias("doc1"), "token")
-    tb = tok.select(F.col("doc_id").alias("_d2"),
-                    F.col("token").alias("token2"))
+    return _jaccard_verify(cand, tok, tok)
+
+
+def _jaccard_verify(cand: DataFrame, tok_l: DataFrame,
+                    tok_r: DataFrame) -> DataFrame:
+    """The one exact-Jaccard verify of the MinHash near-dup family:
+    candidate pairs ``(doc1, doc2)`` -> ``(doc1, doc2, jaccard)`` for
+    the pairs whose shingle sets (``tok_l`` for doc1, ``tok_r`` for
+    doc2; both ``(doc_id, token)``, distinct tokens per doc) have
+    Jaccard >= ``_MINHASH_JACCARD_TAU``, rounded to 6 places like the
+    oracles. The shared-token count is one join + ``groupBy`` over the
+    candidates only; the per-doc set sizes are broadcast."""
+    ta = tok_l.select(F.col("doc_id").alias("doc1"), "token")
+    tb = tok_r.select(F.col("doc_id").alias("_d2"),
+                      F.col("token").alias("token2"))
     verified = (
         cand.join(ta, "doc1")
             .join(tb, (F.col("doc2") == F.col("_d2"))
-                  & (F.col("token") == F.col("token2")), "inner")
+                  & (F.col("token") == F.col("token2")))
             .groupBy("doc1", "doc2").agg(F.count("*").alias("common"))
     )
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n"))
-    s1 = sizes.select(F.col("doc_id").alias("doc1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc2"), F.col("n").alias("n2"))
+    # one aggregate shape for both sides, so a self-verify (tok_l is
+    # tok_r) reuses the size exchange
+    s1, s2 = (t.groupBy("doc_id").agg(F.count("*").alias("n"))
+               .select(F.col("doc_id").alias(d), F.col("n").alias(n))
+              for t, d, n in ((tok_l, "doc1", "n1"), (tok_r, "doc2", "n2")))
     jac = (F.col("common").cast("double")
            / (F.col("n1") + F.col("n2") - F.col("common")))
     return (
         verified.join(F.broadcast(s1), "doc1").join(F.broadcast(s2), "doc2")
-                .filter(jac >= 0.5)
+                .filter(jac >= _MINHASH_JACCARD_TAU)
                 .select("doc1", "doc2", F.round(jac, 6).alias("jaccard"))
     )
 
@@ -631,7 +652,7 @@ SELECT v.new_doc, v.dup_of,
 FROM verified v
 JOIN sizes s1 ON s1.doc_id = v.new_doc
 JOIN sizes s2 ON s2.doc_id = v.dup_of
-WHERE CAST(v.common AS DOUBLE) / (s1.n + s2.n - v.common) >= 0.5
+WHERE CAST(v.common AS DOUBLE) / (s1.n + s2.n - v.common) >= {_MINHASH_JACCARD_TAU}
 """, tier=2, section="2.11")
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup — the shape a production crawl pipeline actually
@@ -656,37 +677,18 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = _minhash_bands(tok)
     is_new = F.col("doc_id") % 4 == 3
     newb = bands.filter(is_new).select(
-        F.col("doc_id").alias("new_doc"), "band", "sig")
+        F.col("doc_id").alias("doc1"), "band", "sig")
     corp = bands.filter(~is_new).select(
-        F.col("doc_id").alias("dup_of"),
+        F.col("doc_id").alias("doc2"),
         F.col("band").alias("band2"), F.col("sig").alias("sig2"))
     cand = (
         newb.join(corp, (F.col("band") == F.col("band2"))
                   & (F.col("sig") == F.col("sig2")))
-            .select("new_doc", "dup_of").distinct()
+            .select("doc1", "doc2").distinct()
     )
-    ta = tok.select(F.col("doc_id").alias("new_doc"), "token")
-    tb = tok.select(F.col("doc_id").alias("_d2"),
-                    F.col("token").alias("token2"))
-    verified = (
-        cand.join(ta, "new_doc")
-            .join(tb, (F.col("dup_of") == F.col("_d2"))
-                  & (F.col("token") == F.col("token2")), "inner")
-            .groupBy("new_doc", "dup_of").agg(F.count("*").alias("common"))
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n"))
-    s1 = sizes.select(F.col("doc_id").alias("new_doc"),
-                      F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("dup_of"),
-                      F.col("n").alias("n2"))
-    jac = (F.col("common").cast("double")
-           / (F.col("n1") + F.col("n2") - F.col("common")))
-    return (
-        verified.join(F.broadcast(s1), "new_doc")
-                .join(F.broadcast(s2), "dup_of")
-                .filter(jac >= 0.5)
-                .select("new_doc", "dup_of", F.round(jac, 6).alias("jaccard"))
-    )
+    return _jaccard_verify(cand, tok, tok).select(
+        F.col("doc1").alias("new_doc"), F.col("doc2").alias("dup_of"),
+        "jaccard")
 
 
 @op("dedup_cluster_cc", oracle=f"""
@@ -718,58 +720,18 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     component's min doc_id — the form a dedup pipeline actually consumes
     (keep cluster_id, drop the rest).
 
-    The iterative algorithm of the suite: min-label propagation, each
+    Labels come from ``cc.min_label_cc``: min-label propagation, each
     round one join + one min-aggregate over the (tiny) edge list, looping
     until a fixpoint (no label changed). Dup clusters are near-cliques,
-    so it converges in ~2 rounds; the driver-side loop is over ROUNDS
-    (distributed work inside), not rows. The DuckDB oracle reaches the
-    same fixpoint by a genuinely different route — a recursive CTE.
+    so it converges in ~2 rounds; a component of diameter > 10 raises
+    (``dedup_cluster_cc_star`` resolves those). The DuckDB oracle
+    reaches the same fixpoint by a genuinely different route — a
+    recursive CTE.
     """
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc1", "doc2")
-    bidir = pairs.unionByName(
-        pairs.select(F.col("doc2").alias("doc1"),
-                     F.col("doc1").alias("doc2"))
-    ).withColumnsRenamed({"doc1": "a", "doc2": "b"})
-    # Self-loop-augmented edges make each round a SINGLE join-aggregate
-    # referencing the labels frame ONCE (round 11): min over
-    # Γ(b) ∪ {b} == least(own, min neighbor) -- value-identical to
-    # the old two-reference least/coalesce form, but the analyzed plan
-    # now grows LINEARLY in rounds instead of doubling per round.
-    # Per-round localCheckpoint (round 12, VERDICT r11 #1): cache()
-    # materializes EXECUTION but not the PLAN TREE, so a graph that
-    # actually uses the round budget (the planted 13-doc chain in
-    # tests/test_wave_r11.py) still compounded ~10 nested copies of the
-    # jaccard lineage into one logical plan and died stringifying it in
-    # a warm session. localCheckpoint truncates lineage each round —
-    # exactly the semantic twin's discipline (similarity.py
-    # dedup_semantic_cluster_cc) and cc.py's.
-    edges = bidir.unionByName(
-        bidir.select("a", F.col("a").alias("b")).distinct()
-    ).localCheckpoint()
-    labels = edges.select(F.col("a").alias("node")).distinct() \
-                  .withColumn("lbl", F.col("node")).localCheckpoint()
-    for _ in range(10):  # cap; real exit is the fixpoint check below
-        new = (
-            edges.join(labels, edges.a == labels.node)
-                 .groupBy(F.col("b").alias("node"))
-                 .agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint()
-        changed = (
-            new.alias("n").join(labels.alias("o"), "node")
-               .filter(F.col("n.lbl") != F.col("o.lbl")).limit(1).count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    else:
-        # ADVICE r9: a component with diameter > the round cap would
-        # otherwise return silently-wrong labels while the recursive-CTE
-        # oracle converges -- non-convergence must fail loudly instead.
-        raise RuntimeError(
-            "dedup_cluster_cc: min-label propagation did not reach a "
-            "fixpoint within the round cap (component diameter > 10)")
-    return labels.select(F.col("node").alias("doc_id"),
-                         F.col("lbl").alias("cluster_id"))
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
+        F.col("doc1").alias("a"), F.col("doc2").alias("b"))
+    return min_label_cc(pairs).select(F.col("node").alias("doc_id"),
+                                      F.col("lbl").alias("cluster_id"))
 
 
 @op("text_unigram_logprob", oracle="""
@@ -3457,11 +3419,11 @@ def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing #4): the same jaccard >= 0.5 near-dup components labeled by
     min doc_id, computed by the alternating large-star/small-star
     algorithm (`cc.cc_star`) instead of bounded-round min-label
-    propagation — converging in O(log² n) rounds regardless of
-    component diameter, so the >10-diameter chain that makes the
+    propagation (`cc.min_label_cc`) — converging in O(log² n) rounds
+    regardless of component diameter, so the >10-diameter chain that makes the
     bounded-round op FAIL LOUDLY (correct detection, ADVICE r9) simply
     resolves here (both behaviors pinned side-by-side on a planted
-    13-doc sliding-overlap chain in tests/test_wave_r11.py; on every
+    13-doc sliding-overlap chain in tests/test_cc.py; on every
     corpus where both converge the outputs are value-identical, and
     the DuckDB oracle is the bounded-round op's recursive CTE
     VERBATIM — same fixpoint, different route).
@@ -3471,8 +3433,6 @@ def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-aggregates + joins over it with eagerly checkpointed
     edge-sized frames — the same per-round cost as min-label, for a
     round count that no longer depends on graph shape."""
-    from ..cc import cc_star
-
     pairs = dedup_ngram_jaccard(spark, sf_dir).select(
         F.col("doc1").alias("a"), F.col("doc2").alias("b"))
     return cc_star(pairs).select(F.col("node").alias("doc_id"),

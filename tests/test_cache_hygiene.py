@@ -1,18 +1,6 @@
 """Cache hygiene for iterative operators (VERDICT r1/r2 item: per-round
-caches in connected-components must not accumulate).
-
-``dedup_cluster_cc``'s round discipline changed in round 12 (VERDICT
-r11 #1): per-round ``localCheckpoint`` instead of cache/unpersist —
-cache materializes execution but NOT the plan tree, and a graph that
-used the full round budget died stringifying ~10 compounded copies of
-the jaccard lineage. A localCheckpointed frame's blocks ARE its data
-(lineage is truncated), so unpersisting intermediates by hand would
-corrupt recomputation; the blocks release via the ContextCleaner when
-the frame's references drop. The hygiene bound is therefore no longer
-"one frame" but "bounded by the round cap": edges + initial labels +
-one labels frame per executed round — each labels-sized, never
-lineage-compounding. At 100 TB that is a fixed ≤12-frame budget of
-component-label frames, not an accumulating cache."""
+caches must not accumulate). The connected-components checkpoint budget
+lives with the other CC tests in tests/test_cc.py."""
 from industry_big_data_time_sequence_process_spark.registry import REGISTRY
 
 from .conftest import SF_SMOKE
@@ -20,19 +8,6 @@ from .conftest import SF_SMOKE
 
 def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-def test_cluster_cc_checkpoint_budget_is_round_bounded(spark):
-    before = _n_persistent(spark)
-    REGISTRY["dedup_cluster_cc"].fn(spark, SF_SMOKE).collect()
-    leaked = _n_persistent(spark) - before
-    # edges + init labels + 10-round cap (dup graphs converge in ~2
-    # rounds on this corpus, so the observed value is ~4; the bound is
-    # the CAP so a pathological-but-legal budget run can't flake)
-    assert leaked <= 12, (
-        f"dedup_cluster_cc left {leaked} checkpointed frames — more than "
-        f"the edges + init + 10-round budget; the bounded-round "
-        f"discipline regressed")
 
 
 def test_ivf_training_unpersists_intermediates(spark):

@@ -7,9 +7,10 @@ the ops that stage on it (`operators/sources_sinks.py`).
   the same version never share a temp path;
 - checkpoint protocol (`txn_checkpoint` / `txn_resolve`): crash window
   between checkpoint write and pointer swap is safe, the pointer is
-  monotonic, reads below the checkpoint full-replay, a damaged
-  checkpoint degrades to the full replay, and threads racing one
-  checkpoint version always publish parseable objects;
+  monotonic (also when threads race different versions), reads below
+  the checkpoint full-replay, a damaged checkpoint degrades to the full
+  replay, and threads racing one checkpoint version always publish
+  parseable objects;
 - AS-OF resolution (`txn_version_at[_resolve]`): greatest version <= ts,
   loud before the first commit and on ts-less manifests, O(suffix)
   reads with early stop and checkpoint seed;
@@ -27,6 +28,7 @@ Protocol pins are pure-filesystem (no SparkSession): the log is
 driver-side metadata by design. The distributed halves are exercised
 and exact-oracled by the `sink_txn_*` ops in tests/test_oracle_parity.py.
 """
+import contextlib
 import json
 import os
 import threading
@@ -284,6 +286,41 @@ def test_checkpoint_thread_race_repeated(tmp_path):
         assert txn_resolve(log, 20) == (replay[20], 20 - v, v)
         assert not [p for p in os.listdir(log) if p.endswith(".tmp")]
     assert bad == []
+
+
+def test_checkpoint_pointer_race_keeps_newest(tmp_path):
+    """Two threads checkpointing DIFFERENT versions (4 and 8) of one
+    log at the same moment, round after round: the monotonic compare
+    and the pointer publish must be one critical section, or the v4
+    checkpointer can read the old pointer, lose the CPU to the v8 one,
+    and then replace 8 with 4. Every round must end at 8."""
+    log = _stage_log(tmp_path, 8)
+    want = txn_resolve(log, 8)[0]
+    stale: list = []
+    for rnd in range(200):
+        for name in ("_last_checkpoint", "_checkpoint.4.json",
+                     "_checkpoint.8.json"):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(log, name))
+        barrier = threading.Barrier(2)
+
+        def checkpointer(version: int) -> None:
+            barrier.wait()
+            txn_checkpoint(log, version)
+
+        ts = [threading.Thread(target=checkpointer, args=(v,))
+              for v in (4, 8)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join()
+        with open(os.path.join(log, "_last_checkpoint")) as f:
+            got = json.load(f)["version"]
+        if got != 8:
+            stale.append((rnd, got))
+    assert stale == []
+    assert txn_resolve(log, 8) == (want, 0, 8)
+    assert not [p for p in os.listdir(log) if p.endswith(".tmp")]
 
 
 # ---------------------------------------------------------------------------

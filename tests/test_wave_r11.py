@@ -7,19 +7,16 @@
 - corpus-trained BPE merges (`text_bpe_train`) + merged-token budget
   twins — VERDICT r10 missing #2;
 - Yule-Walker AR(2) (`ts_ar2_forecast`) + champion enrollment —
-  VERDICT r10 missing #3;
-- large-star/small-star CC (`dedup_cluster_cc_star`) green on a
-  planted high-diameter chain the 10-round path refuses —
-  VERDICT r10 missing #4.
+  VERDICT r10 missing #3.
 
 The round's transaction-log MERGE / conflict / vacuum pins live in
-tests/test_txn_log.py.
+tests/test_txn_log.py; its large-star/small-star CC pins (VERDICT r10
+missing #4) in tests/test_cc.py.
 """
 import pytest
 
 from industry_big_data_time_sequence_process_spark.registry import REGISTRY
 
-from .conftest import SF_T2
 from .test_wave_r10b import T0, _corpus
 
 # ---------------------------------------------------------------------------
@@ -130,58 +127,3 @@ def test_merged_packer_diverges_from_pretoken_packer(spark,
         spark, longword_corpus).collect()
     assert sum(r["tok_sum"] for r in bpe) == 100
     assert sum(r["tok_sum"] for r in mrg) == 400
-
-
-# ---------------------------------------------------------------------------
-# large-star/small-star CC (round 11, §2.37)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def chain_corpus(tmp_path_factory):
-    """13 docs in a sliding-overlap CHAIN: doc_i = 16 unique tokens
-    starting at 4(i-1), so adjacent docs share 12 tokens (3-gram
-    jaccard 10/18 ~ 0.56 >= 0.5 -> edge) while skip-2 docs share 8
-    (6/22 ~ 0.27 < 0.5 -> no edge). One component of diameter 12 —
-    past the bounded-round cap of 10."""
-    toks = [f"t{i:02d}" for i in range(64)]
-    texts = [" ".join(toks[4 * i:4 * i + 16]) for i in range(13)]
-    docs = {"doc_id": list(range(1, 14)), "text": texts,
-            "lang": ["en"] * 13, "source": ["s"] * 13,
-            "n_chars": [len(t) for t in texts]}
-    return _corpus(tmp_path_factory, "chain_corpus", documents=docs)
-
-
-def test_minlabel_cc_refuses_high_diameter_chain(spark, chain_corpus):
-    """The bounded-round op's documented behavior (ADVICE r9): a
-    component with diameter > 10 fails LOUDLY instead of returning
-    wrong labels."""
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        REGISTRY["dedup_cluster_cc"].fn(spark, chain_corpus).collect()
-
-
-def test_star_cc_resolves_high_diameter_chain(spark, chain_corpus):
-    """The star twin answers the corpus the bounded-round path refuses:
-    all 13 docs in one component, labeled by the min doc_id."""
-    rows = REGISTRY["dedup_cluster_cc_star"].fn(spark, chain_corpus) \
-        .collect()
-    assert sorted(r["doc_id"] for r in rows) == list(range(1, 14))
-    assert all(r["cluster_id"] == 1 for r in rows)
-
-
-def test_star_cc_value_equals_minlabel(spark):
-    """On every corpus where the bounded-round path converges, the star
-    path is value-identical — both families."""
-    a = sorted(tuple(r) for r in
-               REGISTRY["dedup_cluster_cc"].fn(spark, SF_T2).collect())
-    b = sorted(tuple(r) for r in
-               REGISTRY["dedup_cluster_cc_star"].fn(spark, SF_T2)
-               .collect())
-    assert a == b and len(a) > 0
-    c = sorted(tuple(r) for r in
-               REGISTRY["dedup_semantic_cluster_cc"].fn(spark, SF_T2)
-               .collect())
-    d = sorted(tuple(r) for r in
-               REGISTRY["dedup_semantic_cluster_cc_star"].fn(spark, SF_T2)
-               .collect())
-    assert c == d and len(c) > 0
